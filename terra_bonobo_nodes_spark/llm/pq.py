@@ -19,9 +19,7 @@ candidate.
 Determinism design — everything rides :mod:`llm.kmeans`'s fixed-point
 arithmetic (exponent-shift quantization is EXACT in IEEE; distances
 and centroid updates are integer), so training, encoding and ADC are
-reproducible to the bit on any engine or partitioning, and a DuckDB
-oracle replays all three stages via ``kmeans_fixed_ctes(prefix=)``
-chains — one per subspace — composed into a single statement.
+reproducible to the bit on any engine or partitioning.
 
 100 TB shape:
 - **train**: ``m`` independent ``kmeans_fixed`` runs over sliced
@@ -236,62 +234,6 @@ def pq_adc_topk(
 
     w = Window.orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
     return top.withColumn("rank", F.row_number().over(w).cast("int"))
-
-
-# --- DuckDB mirrors ---------------------------------------------------------
-
-
-def pq_codes_ctes(
-    vecs_sql: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    m: int = 8,
-    k: int = 16,
-    iterations: int = 3,
-    shift: int = _km.DEFAULT_SHIFT,
-) -> str:
-    """CTE chain (no leading WITH) replaying pq_train + encode: one
-    ``kmeans_fixed_ctes(prefix=f'p{j}_')`` chain per subspace over the
-    sliced subvectors, ending in ``pq_codes(id, code_0..code_{m-1},
-    recon_err)``. Composable into larger oracles."""
-    sub = _check_geometry(dim, m)
-    chains = []
-    for j in range(m):
-        sliced = (
-            f"SELECT {id_col}, list_slice({vec_col}, {j * sub + 1}, "
-            f"{(j + 1) * sub}) AS sub FROM ({vecs_sql}) "
-            f"WHERE {vec_col} IS NOT NULL"
-        )
-        chains.append(
-            _km.kmeans_fixed_ctes(
-                sliced,
-                vec_col="sub",
-                id_col=id_col,
-                k=k,
-                iterations=iterations,
-                dim=sub,
-                shift=shift,
-                prefix=f"p{j}_",
-            )
-        )
-    a = int(iterations)
-    code_cols = ", ".join(
-        f"p{j}_a{a}.cl AS code_{j}" for j in range(m)
-    )
-    err = " + ".join(f"p{j}_a{a}.d" for j in range(m))
-    joins = "\n  ".join(
-        f"JOIN p{j}_a{a} ON p0_a{a}.id = p{j}_a{a}.id" for j in range(1, m)
-    )
-    return (
-        ",\n".join(chains)
-        + f""",
-pq_codes AS (
-  SELECT p0_a{a}.id AS id, {code_cols}, CAST({err} AS BIGINT) AS recon_err
-  FROM p0_a{a}
-  {joins}
-)"""
-    )
 
 
 # --- IVF-PQ (IVFADC: Jégou et al. 2011 §V) ----------------------------------

@@ -1,26 +1,9 @@
-"""Crawl-curation driver rows: registered promotions + the candidate queue.
+"""Registered crawl-curation, corpus-gate and consolidation-surface rows.
 
-ROUND-13 promoted llm_url_dedup_groups, llm_line_dedup,
-llm_gopher_rules, llm_c4_line_filter, llm_blocked_hosts. ROUND-14
-promoted llm_semdedup_kmeans_e2e (into llm_semantic_dedup's slot),
-llm_host_quality_report (widened with HITS — all four graph signals in
-one slot), s12_warc_wet_roundtrip, llm_link_graph_rank,
-llm_source_rule_yield, widened llm_blocked_hosts with the robots
-verdict, and folded word-LM cross-entropy into queries_llm's
-llm_lm_entropy_surface; the subsumed standalone candidates
-(pagerank/trustrank/hits, robots, word-LM) were removed — their
-operators stay pinned by tests/test_graph.py, test_robots.py,
-test_lm.py.
-
-The remaining CANDIDATES-dict rows are the round-15 queue — the
-authoritative count and promotion arithmetic live in the registry
-ledger, not here (this docstring went stale twice enumerating them).
-Deferred entries stay complete (spark_fn, oracle) pairs pinned green
-against DuckDB by tests/test_candidates_oracle.py under the driver's
-exact compare contract — at sf0.001 every suite run and at
-sf0.01/sf0.1 during authoring — and pass the registered queries'
-empty-tables sweep, so each future promotion stays a registration
-edit.
+Each row is a Spark plan plus the DuckDB oracle the correctness driver
+hash-compares it against. The module keeps its name and its first
+place in ``registry.all_queries()``'s import list because import order
+is registration order, which seeds the driver's rotation order.
 """
 
 from __future__ import annotations
@@ -29,11 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.llm import (
-    fuzzy,
     graph,
     hashing,
     kmeans,
-    pq,
     selfdedup,
     similarity,
     text,
@@ -425,227 +406,6 @@ def llm_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# llm_perplexity_buckets ABSORBED late round 17: the due
-# llm_lm_entropy_surface widened with the candidate's distinctive
-# output, the CCNet head/middle/tail ppl_bucket column (the entropy
-# it buckets IS that row's char leg; plans/queries_llm.py carries the
-# oracle text verbatim as _PPL_LEG_SQL). text.perplexity_buckets and
-# its pytest coverage unchanged.
-
-
-# --- llm_dsir_logweights ------------------------------------------------
-# DSIR importance weights with the English slice of documents as the
-# target sample: every raw doc scored by how en-like its hashed
-# unigram+bigram profile is. The oracle replays the identical hashed
-# buckets (hash32 md5 mirror), add-one smoothing, and the
-# DECIMAL(20,6)-quantized log ratios, so the weights are exact.
-
-_DSIR_BUCKETS = 10_000
-
-
-def llm_dsir_logweights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from terra_bonobo_nodes_spark.llm.corpus import dsir_logweights
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    raw = docs.select("doc_id", "text")
-    target = docs.where(F.col("lang") == "en").select("doc_id", "text")
-    out = dsir_logweights(raw, target, buckets=_DSIR_BUCKETS)
-    return out.select("doc_id", "dsir_n_features", "dsir_logweight")
-
-
-DSIR_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, lang, {TOKS_SQL} AS t FROM documents
-), feats AS (
-  SELECT doc_id, lang,
-         unnest(list_concat(t,
-           list_transform(range(1, greatest(len(t) - 1, 0) + 1),
-                          i -> t[i] || ' ' || t[i + 1]))) AS f
-  FROM toks
-), fb AS (
-  SELECT doc_id, lang,
-         (('0x' || substr(md5(f), 1, 8))::BIGINT % {_DSIR_BUCKETS}) AS b
-  FROM feats
-), fc AS (
-  SELECT doc_id, b, count(*) AS c FROM fb GROUP BY 1, 2
-), q AS (
-  SELECT b, sum(c) AS qc FROM fc GROUP BY 1
-), tgt AS (
-  SELECT b, count(*) AS tc FROM fb WHERE lang = 'en' GROUP BY 1
-), model AS (
-  SELECT coalesce(q.b, tgt.b) AS b,
-         coalesce(qc, 0) AS qc, coalesce(tc, 0) AS tc
-  FROM q FULL OUTER JOIN tgt ON q.b = tgt.b
-), tot AS (
-  SELECT sum(qc) AS qt, sum(tc) AS tt FROM model
-), lr AS (
-  SELECT b,
-         CAST(ln(CAST(tc + 1 AS DOUBLE) / CAST(tt + {_DSIR_BUCKETS} AS DOUBLE))
-              AS DECIMAL(20,6))
-       - CAST(ln(CAST(qc + 1 AS DOUBLE) / CAST(qt + {_DSIR_BUCKETS} AS DOUBLE))
-              AS DECIMAL(20,6)) AS lr
-  FROM model CROSS JOIN tot
-), sc AS (
-  SELECT fc.doc_id, sum(c) AS m, sum(lr * c) AS lw
-  FROM fc JOIN lr ON lr.b = fc.b GROUP BY 1
-)
-SELECT d.doc_id,
-       CAST(coalesce(m, 0) AS BIGINT) AS dsir_n_features,
-       CAST(coalesce(lw, 0) AS DOUBLE) AS dsir_logweight
-FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id
-"""
-
-# llm_bloom_decontaminate ABSORBED late round 17: the due
-# llm_decontamination_surface widened with the Bloom screen as its
-# third FULL-joined leg (plans/queries_llm.py — fn, oracle, and the
-# _BLOOM_M/K/N constants moved there verbatim; the anchor-leg
-# capacity-partner route, zero rotation cost). llm/bloom.py and
-# tests/test_bloom.py unchanged.
-
-
-# --- llm_cms_token_freq (authored round 13, r14 candidate) --------------
-# Count-Min Sketch heavy hitters (llm/sketch.py): the bounded-memory
-# token-frequency primitive (constant d x w counters, mergeable by
-# addition, never undercounts). The row builds the sketch distributed,
-# takes the exact top-25 tokens (TakeOrdered), and surfaces
-# exact_count + cms_estimate + the never_undercounts guarantee — every
-# quantity an exact BIGINT, so the oracle replays build AND estimate
-# bit-for-bit (the repo's cleanest oracle class: zero floats).
-
-_CMS_D, _CMS_W, _CMS_TOP = 4, 1 << 12, 25
-
-
-def llm_cms_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from terra_bonobo_nodes_spark.llm.sketch import cms_build, cms_estimate
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.coalesce("text", F.lit("")).alias("text")
-    )
-    toks = docs.select(F.explode(text.tokens("text")).alias("token"))
-    counters = cms_build(toks, token_col="token", d=_CMS_D, w=_CMS_W)
-    top = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("exact_count"))
-        .orderBy(F.col("exact_count").desc(), F.col("token").asc())
-        .limit(_CMS_TOP)
-    )
-    est = cms_estimate("token", counters)
-    return top.select(
-        "token",
-        "exact_count",
-        est.alias("cms_estimate"),
-        (est >= F.col("exact_count")).alias("never_undercounts"),
-    )
-
-
-def _cms_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm.sketch import position_sql
-
-    cells_union = "\nUNION ALL ".join(
-        f"SELECT {i} AS i, {position_sql('token', i, _CMS_W)} AS p FROM toks"
-        for i in range(_CMS_D)
-    )
-    joins = "\n".join(
-        f"JOIN cells c{i} ON c{i}.i = {i} AND c{i}.p = {position_sql('t.token', i, _CMS_W)}"
-        for i in range(_CMS_D)
-    )
-    least = ", ".join(f"c{i}.n" for i in range(_CMS_D))
-    return f"""
-WITH toks AS (
-  SELECT unnest({TOKS_SQL}) AS token
-  FROM (SELECT coalesce(text, '') AS text FROM documents)
-), tf AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS exact_count
-  FROM toks GROUP BY 1
-), top AS (
-  SELECT token, exact_count FROM tf
-  ORDER BY exact_count DESC, token ASC LIMIT {_CMS_TOP}
-), cells AS (
-  SELECT i, p, CAST(count(*) AS BIGINT) AS n
-  FROM ({cells_union}) GROUP BY 1, 2
-)
-SELECT t.token, t.exact_count,
-       least({least}) AS cms_estimate,
-       least({least}) >= t.exact_count AS never_undercounts
-FROM top t
-{joins}
-"""
-
-
-CMS_ORACLE = _cms_oracle()
-
-
-# --- llm_kmeans_fixed_cells (authored round 13, r14 candidate #8) ------------
-# Distributed Lloyd's k-means over the embeddings table with the
-# fixed-point BIGINT design (llm/kmeans.py): 8 clusters, 3 iterations,
-# first-8-by-id init, 2^16 exponent-shift quantization. This is the
-# REAL iterative clustering the semdedup row pins via its codebook
-# seam — assignment scan, argmin, and centroid update all run
-# distributed, and the oracle replays the identical integer iterations
-# as an unrolled CTE chain.
-
-_KM_K, _KM_ITERS, _KM_DIM = 8, 3, 64
-
-KMEANS_ORACLE = kmeans.kmeans_fixed_sql(
-    "SELECT vec_id, embedding FROM embeddings",
-    k=_KM_K,
-    iterations=_KM_ITERS,
-    dim=_KM_DIM,
-)
-
-
-def llm_kmeans_fixed_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-point distributed k-means (llm/kmeans.py::kmeans_fixed):
-    per iteration one k-row broadcast assignment join + combinable
-    min-struct argmin + (cluster, dim)-keyed integer centroid update;
-    no float addition anywhere, so the run is bit-identical on any
-    engine or partitioning. Hypothesis-swept vs an independent Python
-    reference and mirrored in DuckDB (tests/test_kmeans.py)."""
-    vecs = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return kmeans.kmeans_fixed(vecs, k=_KM_K, iterations=_KM_ITERS).select(
-        "vec_id", "cluster", "dist"
-    )
-
-
-# --- llm_fuzzy_title_pairs (authored round 13, r14 candidate #12) ------------
-# Edit-distance similarity join over synthesized record titles: groups
-# of 3 docs share a numeric base title with per-variant typos (append,
-# trailing char), so within-group pairs sit at distance 1-2 and
-# adjacent group numbers contribute digit-typo pairs. Runs the CAPPED
-# production form (block_cap drops stop-gram blocks like 'rec'
-# deterministically — mirrored in SQL by the same count filter).
-
-_FZ_CAP, _FZ_D = 256, 2
-_FZ_TITLE_SPARK = (
-    "concat(cast(doc_id div 3 as string), ' rec', "
-    "CASE pmod(doc_id, 3) WHEN 0 THEN '' WHEN 1 THEN ' x' ELSE 'q' END)"
-)
-_FZ_TITLE_DUCK = (
-    "concat(cast(doc_id // 3 as varchar), ' rec', "
-    "CASE (doc_id % 3) WHEN 0 THEN '' WHEN 1 THEN ' x' ELSE 'q' END)"
-)
-
-FUZZY_ORACLE = fuzzy.edit_distance_pairs_sql(
-    f"SELECT doc_id, {_FZ_TITLE_DUCK} AS text FROM documents",
-    max_dist=_FZ_D,
-    block_cap=_FZ_CAP,
-)
-
-
-def llm_fuzzy_title_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance similarity join (llm/fuzzy.py
-    ::edit_distance_pairs): tiered q-gram/char/tiny blocking with a
-    PROVEN completeness guarantee (brute-force hypothesis sweep,
-    tests/test_fuzzy.py), deterministic block cap for stop-gram hot
-    blocks, exact JVM levenshtein inside blocks only — never a
-    cartesian. The record-linkage operator."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    titled = docs.select("doc_id", F.expr(_FZ_TITLE_SPARK).alias("text"))
-    return fuzzy.edit_distance_pairs(
-        titled, max_dist=_FZ_D, block_cap=_FZ_CAP
-    ).select("id_a", "id_b", "dist")
-
-
 # --- s12_warc_wet_roundtrip (authored round 13, r14 candidate #10) -----------
 # WARC/WET ingestion proven end-to-end IN-PLAN: documents pack into
 # WET-style conversion records (one WARC blob per Arrow batch,
@@ -1014,123 +774,6 @@ def llm_host_quality_report(
     )
 
 
-# --- llm_corpus_overlap_report (authored round 14 continuation, r15 candidate)
-# KMV set operations (llm/distinct.py::kmv_set_ops, Beyer et al. 2007
-# §4): pairwise union / Jaccard / intersection ESTIMATES between the
-# per-event-type user populations, answered from the k-row sketch
-# artifacts alone — the question HLL registers cannot answer and the
-# one a curation team asks of two crawl dumps ("how much does dump A
-# overlap dump B") without re-reading either. Every surfaced column
-# BIGINT (Jaccard stays an integer num/den pair); exact truth columns
-# ride along as the verification harness (the approx_distinct_users
-# pattern). Pair grain — 5 event types -> 10 pairs at every SF.
-
-_SO_K = 64
-
-
-def llm_corpus_overlap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per event-type pair: KMV union/Jaccard/intersection estimates
-    from bottom-64 sketches + the exact truth columns for verification.
-    At corpus scale only the sketch path runs — it reads k rows per
-    group, never the raw table."""
-    from terra_bonobo_nodes_spark.llm import distinct as ds
-
-    ev = load_table(spark, sf_dir, "events")
-    ops = ds.kmv_set_ops(
-        ds.kmv_sketch(ev, "user_id", "event_type", k=_SO_K), _SO_K
-    )
-    users = ev.select("event_type", "user_id").distinct()
-    ua = users.select(
-        F.col("event_type").alias("group_a"), F.col("user_id").alias("_u")
-    )
-    ub = users.select(
-        F.col("event_type").alias("group_b"), F.col("user_id").alias("_u")
-    )
-    exact = (
-        ua.join(ub, "_u")
-        .where(F.col("group_a") < F.col("group_b"))
-        .groupBy("group_a", "group_b")
-        .agg(F.count(F.lit(1)).alias("exact_inter"))
-    )
-    return (
-        ops.join(exact, ["group_a", "group_b"], "left")
-        .select(
-            "group_a",
-            "group_b",
-            "union_size",
-            "union_est",
-            "jaccard_num",
-            "jaccard_den",
-            "inter_est",
-            F.coalesce("exact_inter", F.lit(0)).cast("long").alias("exact_inter"),
-        )
-    )
-
-
-def _corpus_overlap_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm import distinct as ds
-
-    ops = ds.kmv_set_ops_sql(
-        "SELECT * FROM events", "user_id", "event_type", _SO_K
-    )
-    return f"""
-WITH _ops AS ({ops}),
-_uu AS (SELECT DISTINCT event_type, user_id FROM events),
-_exact AS (
-  SELECT a.event_type AS group_a, b.event_type AS group_b,
-         count(*) AS exact_inter
-  FROM _uu a JOIN _uu b
-    ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT o.group_a, o.group_b, o.union_size, o.union_est,
-       o.jaccard_num, o.jaccard_den, o.inter_est,
-       CAST(coalesce(e.exact_inter, 0) AS BIGINT) AS exact_inter
-FROM _ops o LEFT JOIN _exact e USING (group_a, group_b)
-"""
-
-
-CORPUS_OVERLAP_ORACLE = _corpus_overlap_oracle()
-
-
-# --- llm_stride_interleave_order (authored round 14 continuation, r15 cand.) --
-# Stride-scheduling mixture interleave (llm/corpus.py::
-# stride_interleave, Waldspurger & Weihl 1995): the deterministic
-# proportional-share WRITE ORDER for a heterogeneous mixture — the
-# step between the samplers (which pick the documents) and the shard
-# writer (which materializes the order via repartitionByRange on the
-# key). en-heavy 4:2:1:1 weights over the documents langs; zh left
-# unlisted to pin the drop contract. Doc grain; every column integer.
-
-_SI_WEIGHTS = {"en": 4, "fr": 2, "de": 1, "es": 1}
-
-
-def llm_stride_interleave_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per kept document: within-source seeded-hash rank and the
-    integer stride key a training reader sorts by — in any key prefix
-    each language's share deviates from its weight ratio by at most
-    one document per source. One window shuffle on the source key."""
-    from terra_bonobo_nodes_spark.llm.corpus import stride_interleave
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    return stride_interleave(
-        docs, _SI_WEIGHTS, source_col="lang", id_col="doc_id"
-    ).select("doc_id", "lang", "src_rank", "interleave_key")
-
-
-def _stride_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm.corpus import stride_interleave_sql
-
-    inner = stride_interleave_sql(
-        "SELECT doc_id, lang FROM documents", _SI_WEIGHTS,
-        source_expr="lang", id_expr="doc_id",
-    )
-    return f"SELECT doc_id, lang, src_rank, interleave_key FROM ({inner})"
-
-
-STRIDE_ORACLE = _stride_oracle()
-
-
 # --- corpus_version_diff (authored round 14 continuation, r15 candidate) ------
 # Snapshot diff (operators/cdc.py::snapshot_diff): the report a
 # curation team reads before promoting corpus v(N+1) over vN — every
@@ -1192,63 +835,6 @@ register(
     headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
     tags=("cdc", "gate"),
 )(corpus_version_diff)
-
-
-# --- llm_vocab_coverage_report (authored round 14 continuation, r15 cand.) ----
-# Tokenizer-fit report (llm/text.py::vocab_coverage + top_tokens):
-# per-language OOV rate against a vocabulary built from the corpus's
-# own top-256 tokens — the signal that decides whether a tokenizer
-# trained on one mix is reusable on another. The top-k builder plans
-# as TakeOrderedAndProject (per-partition heaps, no global sort); the
-# coverage join broadcasts the vocabulary. Every surfaced column an
-# exact integer (rate in ppm by floor division).
-
-_VC_K = 256
-
-
-def llm_vocab_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(lang, n_tokens, n_oov, oov_rate_ppm) against the corpus's own
-    top-256 token vocabulary."""
-    from terra_bonobo_nodes_spark.llm.text import top_tokens, vocab_coverage
-
-    docs = load_table(spark, sf_dir, "documents").select("lang", "text")
-    vocab = top_tokens(docs, _VC_K).select("token")
-    return vocab_coverage(docs, vocab, group_col="lang").select(
-        F.col("group").alias("lang"), "n_tokens", "n_oov", "oov_rate_ppm"
-    )
-
-
-VOCAB_COVERAGE_ORACLE = f"""
-WITH _toks AS (
-  SELECT lang, unnest({TOKS_SQL}) AS tok
-  FROM (SELECT lang, coalesce(text, '') AS text FROM documents)
-),
-_vocab AS (
-  SELECT tok AS vtok FROM (
-    SELECT tok, count(*) AS n FROM _toks GROUP BY tok
-  ) ORDER BY n DESC, tok ASC LIMIT {_VC_K}
-),
-_grps AS (SELECT DISTINCT lang FROM documents),
-_agg AS (
-  SELECT t.lang,
-         count(*) AS n_tokens,
-         sum(CASE WHEN v.vtok IS NULL THEN 1 ELSE 0 END) AS n_oov
-  FROM _toks t LEFT JOIN _vocab v ON t.tok = v.vtok
-  GROUP BY t.lang
-)
-SELECT g.lang,
-       CAST(coalesce(a.n_tokens, 0) AS BIGINT) AS n_tokens,
-       CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
-       CAST(CASE WHEN coalesce(a.n_tokens, 0) > 0
-            THEN (a.n_oov * 1000000) // a.n_tokens END AS BIGINT)
-         AS oov_rate_ppm
-FROM _grps g LEFT JOIN _agg a ON g.lang IS NOT DISTINCT FROM a.lang
-"""
-# ^ IS NOT DISTINCT FROM, not USING(lang): Spark's groupBy collapses a
-# NULL lang into a real group with actual counts, while a plain SQL
-# equi-join would never match the NULL spine row and report (0,0,NULL)
-# — latent cross-engine divergence if a NULL-lang row ever enters the
-# documents fixture (ADVICE r15).
 
 
 # --- llm_readability_scores: PROMOTED round 15 (zero-net merge) --------------
@@ -1429,50 +1015,6 @@ register(
 )(llm_source_rule_funnel)
 
 
-# --- llm_packing_efficiency (authored round 14 continuation, r15 candidate) ---
-# Padding-waste ledger (llm/corpus.py::packing_efficiency): per source,
-# training sequences under NAIVE one-doc-per-sequence padding vs the
-# chunk_assignments PACKED stream at a 512-token budget — the report
-# that justifies the packing step in tokens saved. Source grain,
-# every column an exact integer; zero windows (the packed ceil needs
-# only per-shard token totals).
-
-_PE_BUDGET, _PE_SHARDS = 512, 8
-
-
-def llm_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per source: doc/token counts, naive vs packed sequence counts,
-    and each layout's wasted-token ppm."""
-    from terra_bonobo_nodes_spark.llm.corpus import packing_efficiency
-    from terra_bonobo_nodes_spark.llm.text import tokens
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.size(tokens(F.coalesce(F.col("text"), F.lit(""))))
-        .cast("long")
-        .alias("n_tokens"),
-    )
-    return packing_efficiency(
-        docs, budget=_PE_BUDGET, n_shards=_PE_SHARDS
-    )
-
-
-def _packing_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm.corpus import packing_efficiency_sql
-
-    toks_coal = TOKS_SQL.replace("lower(text)", "lower(coalesce(text, ''))")
-    src_rel = (
-        "SELECT doc_id, source, "
-        f"len({toks_coal}) AS n_tokens "
-        "FROM documents"
-    )
-    return packing_efficiency_sql(src_rel, _PE_BUDGET, _PE_SHARDS)
-
-
-PACKING_ORACLE = _packing_oracle()
-
-
 # --- corpus_drift_psi (authored round 14 continuation, r15 candidate) ---------
 # PSI distribution drift (operators/quality.py::distribution_drift):
 # the promotion-gate complement of corpus_version_diff — diff says
@@ -1614,99 +1156,6 @@ register(
 )(events_cohort_retention)
 
 
-# --- cms_join_size_report (authored round 14 continuation, r15 candidate) -----
-# Sketch-based join-size estimation (llm/sketch.py::cms_inner_product,
-# Cormode & Muthukrishnan 2005 §4.2): "how big will this join be?"
-# answered from two d*w sketches BEFORE paying for the join — the
-# planner question that completes the sketch family's five
-# (membership / frequency / cardinality / quantile / join size).
-# Two joins measured: orders x lineitem on orderkey (fk shape) and
-# the events self-join on user_id (skew shape, sum n_u^2); exact truth
-# rides along with the never-undercount flag.
-
-# w sizing: the estimate's additive error is ~ N_a*N_b/w per the CM
-# guarantee, so w must scale with the CROSS size over the acceptable
-# absolute error — at sf0.1 (150k orders x 600k lineitems) w=2^18
-# bounds the collision mass near the true join size (measured:
-# est/exact 2.0 at 2^18 vs 37x at the 2^12 default; still only
-# d*w = 1M BIGINT cells, sketch-sized). The same report at w=2^12
-# would be honest but useless — the exact column exists to SHOW that.
-_JS_D, _JS_W = 4, 1 << 18
-
-
-def cms_join_size_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(join_name, est_join_size, exact_join_size, never_under)."""
-    from terra_bonobo_nodes_spark.llm.sketch import cms_cells, cms_inner_product
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("string").alias("token")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").cast("string").alias("token")
-    )
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("token")
-    )
-
-    def one(name, ta, tb):
-        est = cms_inner_product(
-            cms_cells(ta, d=_JS_D, w=_JS_W), cms_cells(tb, d=_JS_D, w=_JS_W)
-        ).select("est_join_size")
-        ca = ta.groupBy("token").agg(F.count(F.lit(1)).alias("_fa"))
-        cb = tb.groupBy("token").agg(F.count(F.lit(1)).alias("_fb"))
-        exact = ca.join(cb, "token").agg(
-            F.coalesce(F.sum(F.col("_fa") * F.col("_fb")), F.lit(0))
-            .cast("long")
-            .alias("exact_join_size")
-        )
-        return est.crossJoin(exact).select(
-            F.lit(name).alias("join_name"),
-            "est_join_size",
-            "exact_join_size",
-            (F.col("est_join_size") >= F.col("exact_join_size")).alias(
-                "never_under"
-            ),
-        )
-
-    return one("orders_lineitem", orders, li).unionByName(
-        one("events_self_users", ev, ev)
-    )
-
-
-def _join_size_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm.sketch import cms_inner_product_sql
-
-    def one(name, src_a, src_b, ka, kb):
-        ip = cms_inner_product_sql(src_a, src_b, ka, kb, _JS_D, _JS_W)
-        return f"""
-SELECT '{name}' AS join_name, i.est_join_size,
-       CAST(coalesce(x.exact, 0) AS BIGINT) AS exact_join_size,
-       i.est_join_size >= coalesce(x.exact, 0) AS never_under
-FROM ({ip}) i CROSS JOIN (
-  SELECT sum(fa * fb) AS exact FROM
-    (SELECT k, count(*) AS fa FROM ({src_a}) t(k) GROUP BY 1) a
-    JOIN (SELECT k, count(*) AS fb FROM ({src_b}) t(k) GROUP BY 1) b
-    USING (k)
-) x"""
-
-    q1 = one(
-        "orders_lineitem",
-        "SELECT CAST(o_orderkey AS VARCHAR) AS k FROM orders",
-        "SELECT CAST(l_orderkey AS VARCHAR) AS k FROM lineitem",
-        "k", "k",
-    )
-    q2 = one(
-        "events_self_users",
-        "SELECT CAST(user_id AS VARCHAR) AS k FROM events",
-        "SELECT CAST(user_id AS VARCHAR) AS k FROM events",
-        "k", "k",
-    )
-    return q1 + "\nUNION ALL\n" + q2
-
-
-JOIN_SIZE_ORACLE = _join_size_oracle()
-
-
 # --- llm_novelty_scores (authored round 14 continuation, r15 candidate) -------
 # Semantic novelty of a corpus-version ADDITION set: each new vector's
 # nearest neighbor in the standing corpus and a novel/redundant
@@ -1780,41 +1229,6 @@ register(
     headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
     tags=("llm", "embedding", "gate"),
 )(llm_novelty_scores)
-
-
-# --- llm_length_outliers (authored round 14 continuation, r15 candidate) ------
-# Median/MAD robust outlier screen (operators/quality.py::
-# robust_outliers): the screen that survives the one 2GB page a
-# mean/stddev z-score cannot — exact discrete medians, integer
-# cross-multiplied threshold, full replay. Doc grain over n_chars per
-# source at k=5.
-
-
-def llm_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(source, n_chars, med, mad, is_outlier) per document."""
-    from terra_bonobo_nodes_spark.operators.quality import robust_outliers
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "n_chars"
-    )
-    return robust_outliers(docs, "n_chars", "source", k_num=5).select(
-        "source", "n_chars", "med", "mad", "is_outlier"
-    )
-
-
-def _length_outliers_oracle() -> str:
-    from terra_bonobo_nodes_spark.operators.quality import robust_outliers_sql
-
-    inner = robust_outliers_sql(
-        "SELECT source, n_chars FROM documents", "n_chars", "source", 5
-    )
-    return (
-        "SELECT g AS source, v AS n_chars, med, mad, is_outlier "
-        f"FROM ({inner})"
-    )
-
-
-LENGTH_OUTLIERS_ORACLE = _length_outliers_oracle()
 
 
 # --- llm_host_communities (authored round 14 continuation, r15 candidate) ----
@@ -2050,7 +1464,6 @@ register(
 )(llm_blocked_hosts)
 
 
-
 # --- llm_anchor_text_topk (authored round 13, r14 candidate) ------------
 # The anchor-text index — "what the web says about a host" (the
 # classic off-page relevance signal): pages -> TAG-AWARE link
@@ -2252,321 +1665,6 @@ register(
 )(llm_link_graph_surface)
 
 
-# --- llm_token_budget_mix (authored round 13, r14 candidate) ------------
-# Token-budgeted data mixing (llm/corpus.py::token_budget_sample): the
-# 'data mixture' step where the spec is TOKENS per domain, not doc
-# counts — per-lang budgets filled greedily in seeded-hash order, the
-# crossing doc kept, the unbudgeted domain (de) dropped wholesale. The
-# oracle replays the identical md5-derived ordering, whitespace token
-# counts, and running-sum window, so the KEPT SET matches exactly.
-
-_TBM_SEED = "tbns-budget-v1"
-_TBM_BUDGETS = {"en": 5000, "fr": 2000, "es": 1500, "zh": 900}
-
-
-def llm_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from terra_bonobo_nodes_spark.llm.corpus import token_budget_sample
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    out = token_budget_sample(
-        docs, _TBM_BUDGETS, source_col="lang", seed=_TBM_SEED
-    )
-    return out.select("doc_id", "lang", "n_tokens")
-
-
-_TBM_CASE = (
-    "CASE lang "
-    + " ".join(f"WHEN '{k}' THEN {v}" for k, v in sorted(_TBM_BUDGETS.items()))
-    + " END"
-)
-
-TOKEN_BUDGET_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, lang,
-         CAST(len(list_filter(
-           str_split({hashing.normalize_sql("coalesce(text, '')")}, ' '),
-           w -> len(w) > 0)) AS BIGINT) AS n_tokens,
-         {hashing.hash32_sql(f"'{_TBM_SEED}' || CAST(doc_id AS VARCHAR)")} AS u
-  FROM documents
-), c AS (
-  SELECT doc_id, lang, n_tokens,
-         coalesce(sum(n_tokens) OVER (
-           PARTITION BY lang ORDER BY u ASC, doc_id ASC
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-  FROM t)
-SELECT doc_id, lang, n_tokens FROM c
-WHERE {_TBM_CASE} IS NOT NULL AND before < {_TBM_CASE}
-"""
-
-
-# llm_host_hits / llm_word_lm_xent standalone candidates REMOVED round
-# 14: HITS hub/auth is driver-verified inside the registered (widened)
-# llm_host_quality_report; word-LM cross-entropy inside the registered
-# llm_lm_entropy_surface (the widened char-LM row). Operators stay
-# pinned by tests/test_graph.py and tests/test_lm.py.
-
-# Still-deferred candidates (round-14 budget — see the registry
-# ledger); the five promoted rows left this dict for the registry and
-# are now pinned by the driver contract itself.
-
-# --- llm_pq_codes (authored round 14, r15 candidate; WIDENED late r14
-# with the full IVFADC composition) -----------------------------------------
-# Product quantization + IVFADC (llm/pq.py, Jegou et al. 2011 incl.
-# §V): flat PQ — m per-subspace codebooks trained distributed via
-# kmeans_fixed, codes + reconstruction error + ADC distance to a
-# pinned query — AND the production composition: coarse kmeans cells,
-# PQ retrained on the INTEGER residual (shift=0 — floor(v*2^0) of an
-# integer-valued double is the identity), residual codes/recon and the
-# per-cell ADC of the query's residual. The oracle replays EVERYTHING:
-# flat chains p{j}_*, coarse chain cc_*, residual chains r{j}_* over
-# the SQL-computed residual vectors, and both ADC arithmetics. Only
-# the driver-side n_probe cell ranking stays pytest-only (a sort over
-# k_coarse driver ints).
-
-_PQ_DIM, _PQ_M, _PQ_K, _PQ_ITERS = 64, 4, 8, 2
-_PQ_SUB = _PQ_DIM // _PQ_M
-_IVF_KC = 4
-# deterministic non-degenerate query spread over [0, 1)
-_PQ_QUERY = [((i * 7) % 13) / 13.0 for i in range(_PQ_DIM)]
-
-
-def _pq_query_quantized() -> list[int]:
-    import math
-
-    from terra_bonobo_nodes_spark.llm.kmeans import DEFAULT_SHIFT
-
-    scale = float(2**DEFAULT_SHIFT)
-    return [int(math.floor(v * scale)) for v in _PQ_QUERY]
-
-
-def llm_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # degenerate-input contract (the semantic_dedup precedent): an empty
-    # corpus yields an empty well-formed frame; pq_train itself stays
-    # loud (an empty TRAINING set is a caller bug in production)
-    if emb.limit(1).count() == 0:
-        cols = ", ".join(f"code_{j} BIGINT" for j in range(_PQ_M))
-        rcols = ", ".join(f"ivf_code_{j} BIGINT" for j in range(_PQ_M))
-        return spark.createDataFrame(
-            [],
-            f"vec_id BIGINT, {cols}, recon_err BIGINT, adc_dist BIGINT, "
-            f"ivf_cell BIGINT, {rcols}, ivf_recon BIGINT, ivf_adc BIGINT",
-        )
-    # flat PQ
-    books = pq.pq_train(
-        emb, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS
-    )
-    table = pq.adc_table(_PQ_QUERY, books)
-    coded = emb.where(F.col("embedding").isNotNull()).select(
-        "vec_id",
-        pq.pq_encode_expr("embedding", books).alias("_codes"),
-        pq.pq_reconstruction_error_expr("embedding", books).alias("recon_err"),
-    )
-    flat = coded.select(
-        "vec_id",
-        *[
-            F.element_at("_codes", j + 1).alias(f"code_{j}")
-            for j in range(_PQ_M)
-        ],
-        "recon_err",
-        pq.pq_adc_dist_expr("_codes", table).alias("adc_dist"),
-    )
-    # IVFADC: coarse cells + residual PQ
-    coarse, rbooks = pq.ivf_pq_train(
-        emb, dim=_PQ_DIM, k_coarse=_IVF_KC, m=_PQ_M, k_sub=_PQ_K,
-        iterations=_PQ_ITERS,
-    )
-    res = pq._residuals(emb, coarse, vec_col="embedding", id_col="vec_id",
-                        shift=16)
-    qv = _pq_query_quantized()
-    tables = {
-        cl: pq.adc_table(
-            [float(a - b) for a, b in zip(qv, coarse[cl])], rbooks, shift=0
-        )
-        for cl in coarse
-    }
-    rcoded = res.select(
-        "vec_id",
-        F.col("_cell").cast("long").alias("ivf_cell"),
-        pq.pq_encode_expr(F.col("_res"), rbooks, shift=0).alias("_rc"),
-        pq.pq_reconstruction_error_expr(F.col("_res"), rbooks, shift=0)
-        .alias("ivf_recon"),
-    )
-    ivf_adc = None
-    for cl in sorted(coarse):
-        d = pq.pq_adc_dist_expr("_rc", tables[cl])
-        ivf_adc = (
-            F.when(F.col("ivf_cell") == int(cl), d)
-            if ivf_adc is None
-            else ivf_adc.when(F.col("ivf_cell") == int(cl), d)
-        )
-    ivf = rcoded.select(
-        "vec_id",
-        "ivf_cell",
-        *[
-            F.element_at("_rc", j + 1).alias(f"ivf_code_{j}")
-            for j in range(_PQ_M)
-        ],
-        "ivf_recon",
-        ivf_adc.alias("ivf_adc"),
-    )
-    return flat.join(ivf, "vec_id")
-
-
-def _pq_oracle() -> str:
-    qv = _pq_query_quantized()
-    emb_sql = (
-        "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))"
-        " AS embedding FROM embeddings"
-    )
-    chain = pq.pq_codes_ctes(
-        emb_sql, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS
-    )
-    a = _PQ_ITERS
-    # flat ADC: distance from the quantized query subvector to the
-    # assigned centroid = table[j][code_j] by construction
-    adc_ctes, adc_cols = [], []
-    for j in range(_PQ_M):
-        qs = qv[j * _PQ_SUB : (j + 1) * _PQ_SUB]
-        d2 = " + ".join(
-            f"({q} - c.c[{i + 1}]) * ({q} - c.c[{i + 1}])"
-            for i, q in enumerate(qs)
-        )
-        adc_ctes.append(
-            f""",
-p{j}_adc AS (
-  SELECT a.id, CAST({d2} AS BIGINT) AS adc
-  FROM p{j}_a{a} a JOIN p{j}_c{a - 1} c ON a.cl = c.cl
-)"""
-        )
-        adc_cols.append(f"p{j}_adc.adc")
-    # coarse chain + SQL-computed integer residuals
-    from terra_bonobo_nodes_spark.llm import kmeans as _km
-
-    cc = _km.kmeans_fixed_ctes(
-        emb_sql, k=_IVF_KC, iterations=_PQ_ITERS, dim=_PQ_DIM, prefix="cc_"
-    )
-    qlit = "[" + ", ".join(str(v) for v in qv) + "]"
-    res_cte = f""",
-res AS (
-  SELECT a.id, a.cl,
-         list_transform(list_zip(q.x, c.c),
-                        p -> CAST(p[1] - p[2] AS DOUBLE)) AS r
-  FROM cc_a{a} a
-  JOIN cc_q q ON q.id = a.id
-  JOIN cc_c{a - 1} c ON c.cl = a.cl
-), qres AS (
-  SELECT cl, list_transform(list_zip(c, {qlit}), p -> p[2] - p[1]) AS qr
-  FROM cc_c{a - 1}
-)"""
-    rchains, radc_ctes = [], []
-    for j in range(_PQ_M):
-        lo, hi = j * _PQ_SUB + 1, (j + 1) * _PQ_SUB
-        rchains.append(
-            _km.kmeans_fixed_ctes(
-                f"SELECT id, list_slice(r, {lo}, {hi}) AS sub FROM res",
-                vec_col="sub",
-                id_col="id",
-                k=_PQ_K,
-                iterations=_PQ_ITERS,
-                dim=_PQ_SUB,
-                shift=0,
-                prefix=f"r{j}_",
-            )
-        )
-        radc_ctes.append(
-            f""",
-r{j}_adc AS (
-  SELECT a.id,
-         CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-              list_transform(list_zip(list_slice(qr.qr, {lo}, {hi}), c.c),
-                             p -> (p[1] - p[2]) * (p[1] - p[2]))),
-              (acc, x) -> acc + x) AS BIGINT) AS adc
-  FROM r{j}_a{a} a
-  JOIN res ON res.id = a.id
-  JOIN qres qr ON qr.cl = res.cl
-  JOIN r{j}_c{a - 1} c ON c.cl = a.cl
-)"""
-        )
-    code_cols = ", ".join(
-        f"CAST(code_{j} AS BIGINT) AS code_{j}" for j in range(_PQ_M)
-    )
-    rcode_cols = ", ".join(
-        f"CAST(r{j}_a{a}.cl AS BIGINT) AS ivf_code_{j}" for j in range(_PQ_M)
-    )
-    rrecon = " + ".join(f"r{j}_a{a}.d" for j in range(_PQ_M))
-    radc = " + ".join(f"r{j}_adc.adc" for j in range(_PQ_M))
-    joins = "\n  ".join(
-        [f"JOIN p{j}_adc ON pq_codes.id = p{j}_adc.id" for j in range(_PQ_M)]
-        + ["JOIN res ON res.id = pq_codes.id"]
-        + [f"JOIN r{j}_a{a} ON r{j}_a{a}.id = pq_codes.id" for j in range(_PQ_M)]
-        + [f"JOIN r{j}_adc ON r{j}_adc.id = pq_codes.id" for j in range(_PQ_M)]
-    )
-    return f"""
-WITH {chain}{"".join(adc_ctes)},
-{cc}{res_cte},
-{",".join(rchains)}{"".join(radc_ctes)}
-SELECT pq_codes.id AS vec_id, {code_cols}, recon_err,
-       CAST({" + ".join(adc_cols)} AS BIGINT) AS adc_dist,
-       CAST(res.cl AS BIGINT) AS ivf_cell,
-       {rcode_cols},
-       CAST({rrecon} AS BIGINT) AS ivf_recon,
-       CAST({radc} AS BIGINT) AS ivf_adc
-FROM pq_codes
-  {joins}
-"""
-
-
-PQ_ORACLE = _pq_oracle()
-
-
-# --- llm_bitext_margin_pairs (authored round 14, r15 candidate) ----------
-# Margin-based bitext mining (llm/bitext.py, Artetxe & Schwenk 2019):
-# the cross-lingual pairing step — embeddings split by vec_id parity
-# into pseudo source/target collections, mutual best matches kept at
-# ratio margin >= 1.0. Cosines are the fold-order-exact doubles the
-# cosine rows already pin; ranks tie-break by id; margins are ratios
-# of identically-computed doubles, so the oracle replays verdicts
-# value-for-value (floats surfaced at 4dp for the hash).
-
-
-def llm_bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from terra_bonobo_nodes_spark.llm import bitext
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    src = emb.where(F.pmod("vec_id", F.lit(2)) == 0)
-    tgt = emb.where(F.pmod("vec_id", F.lit(2)) == 1)
-    out = bitext.margin_knn_pairs(
-        src, tgt, k=4, min_margin=1.0, mutual_only=True, max_rows=None
-    )
-    return out.select(
-        "src_id",
-        "tgt_id",
-        F.round("cos_sim", 4).alias("cos_sim"),
-        F.round("margin", 4).alias("margin"),
-    )
-
-
-def _bitext_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm import bitext
-
-    inner = bitext.margin_knn_pairs_sql(
-        "SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0",
-        "SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 1",
-        k=4,
-        min_margin=1.0,
-        mutual_only=True,
-    )
-    return (
-        "SELECT src_id, tgt_id, round(cos_sim, 4) AS cos_sim, "
-        f"round(margin, 4) AS margin FROM ({inner})"
-    )
-
-
-BITEXT_ORACLE = _bitext_oracle()
-
-
-
 # llm_sentence_stats ABSORBED late round 17: the due
 # llm_repetition_ratios row widened with the four sentence-grain
 # columns (plans/queries_llm.py — fn chained on the same scan, oracle
@@ -2706,55 +1804,6 @@ register(
     headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
     tags=("layout", "spatial"),
 )(layout_zorder_pruning)
-
-
-# --- llm_priority_sample_report: RETIRED from the queue (round 15) -----------
-# The lang-grain DLT audit report left the queue when the r16 staging
-# replaced it with the DOC-grain llm_sample_surface_wide (the widened
-# registered row carries priority_rank next to the reservoir/quota
-# verdicts). The operator pair (wsample.priority_sample /
-# priority_sample_report) and both SQL mirrors stay live and pinned in
-# tests/test_wsample.py; the report-grain row form was dead weight
-# once nothing swept its oracle (review finding r15).
-
-
-# --- llm_bpe_merges (authored round 15, queue tail) ---------------------------
-# BPE merge learning (llm/bpe.py — Sennrich 2016, the tokenizer-
-# training step every LLM vocabulary comes from): the first 8 merges
-# over the documents corpus, learned distributed (word-count table is
-# the working set; each round = one combinable pair aggregate + a
-# 1-row argmax + a pure-Column rewrite — the llm/kmeans.py bounded-
-# driver-state shape, 8 pairs total on the driver). Merge-grain row;
-# counts and tie-breaks exact integers/strings, so the oracle's
-# unrolled 8-round CTE chain hash-compares bit-for-bit.
-
-_BPE_M = 8
-
-
-def llm_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(merge_rank, sym_a, sym_b, pair_count) — the learned merge
-    table, priority-ordered. The artifact a tokenizer ships."""
-    from terra_bonobo_nodes_spark.llm import bpe
-
-    docs = load_table(spark, sf_dir, "documents").select("text")
-    merges = bpe.bpe_learn(docs, "text", n_merges=_BPE_M)
-    return spark.createDataFrame(
-        merges, "merge_rank int, sym_a string, sym_b string, pair_count long"
-    )
-
-
-def _bpe_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm.bpe import bpe_merges_sql
-
-    return (
-        "SELECT CAST(merge_rank AS INT) AS merge_rank, sym_a, sym_b, "
-        "CAST(pair_count AS BIGINT) AS pair_count FROM ("
-        + bpe_merges_sql("SELECT text FROM documents", "text", _BPE_M, TOKS_SQL)
-        + ")"
-    )
-
-
-BPE_ORACLE = _bpe_oracle()
 
 
 # --- llm_sample_surface_wide: PROMOTED round 16 (ledger item 2) ---------------
@@ -3081,207 +2130,6 @@ register(
 )(g_scalar_geometry_surface)
 
 
-
-
-# stream_window_agg_surface_wide PROMOTED round 17: the staged merge
-# moved into plans/queries_streaming.py as the registered
-# stream_window_agg_surface (third union leg kind='props', retiring
-# stream_props_json_rollup — ledger item 3 funding).
-
-
-# llm_codec_throughput_pinned / llm_audio_spectral_pinned PROMOTED
-# round 17: the KAT-pinned forms swapped INTO the registered
-# llm_codec_throughput / llm_audio_spectral rows (plans/queries_llm.py
-# — VERDICT_r15 item 6; the registry's no-oracle count is now ZERO).
-
-
-# --- s_document_roundtrip_surface (authored round 17 — the r18
-# consolidation, PLANS.md scan item 1) ---------------------------------------
-# The four content-codec roundtrip rows (s1 CSV, s2 GeoJSON, s8 zip,
-# s9 JSONL — plans/queries_sources.py) each prove "pack a table into
-# payload documents, run the real source operator, recover the rows",
-# but over four DIFFERENT tables, so they cost four driver slots that
-# refresh (and fall due) together. This surface re-authors all four
-# roundtrips at ONE grain — (kind, doc_id) over documents — the
-# p_record_ops_surface re-author pattern, not a union of the old rows:
-#   csv     csv_documents_to_rows   metadata + md5 digest (CSV cannot
-#           carry free text unquoted; the digest IS the payload, and
-#           hash equality proves the codec moved it intact)
-#   jsonl   jsonl_documents_to_rows the REAL text through the codec
-#           (to_json escaping both ways), digest computed after
-#   zip     zip_reader              the REAL text bytes as the entry
-#           payload; lang/doc_id/n_chars ride the entry path (the
-#           corpus-archive layout convention), digest after
-#   geojson geojson_reader          metadata + digest as feature
-#           properties, doc_id as the feature id, plus the geometry
-#           roundtrip (gx/gy from st_x/st_y; NULL on the other legs)
-# Every leg's packing is one groupBy(source) collect_list (20 payload
-# documents); parsing stays JVM-side for csv/jsonl (from_csv /
-# from_json) and Arrow-batched for zip/geojson (mapInPandas), so at
-# 100 TB the only shuffle is the per-source packing — and a real
-# corpus arrives already packed, skipping it entirely.
-# Registration partners (r18 ledger item 1): retires
-# s1_csv_document_roundtrip / s2_geojson_reader_roundtrip /
-# s8_zip_reader_roundtrip / s9_jsonl_roundtrip.
-
-
-def s_document_roundtrip_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All four content-codec roundtrips (CSV / JSONL / zip / GeoJSON)
-    at one documents grain, union-tagged by kind — the r18
-    retire-and-replace for the four standalone s-family rows."""
-    import pandas as pd
-
-    from terra_bonobo_nodes_spark.geo import kernels as K
-    from terra_bonobo_nodes_spark.sources.archive import zip_reader
-    from terra_bonobo_nodes_spark.sources.csv import csv_documents_to_rows
-    from terra_bonobo_nodes_spark.sources.geojson import geojson_reader
-    from terra_bonobo_nodes_spark.sources.jsonl import jsonl_documents_to_rows
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", "lang", "n_chars", "text"
-    )
-    base = docs.withColumn("text_chk", F.md5(F.encode("text", "UTF-8")))
-    null_d = F.lit(None).cast("double")
-
-    # csv: header line + one row per doc, packed per source
-    line = F.concat_ws(
-        ",",
-        F.col("doc_id").cast("string"),
-        F.col("lang"),
-        F.col("n_chars").cast("string"),
-        F.col("text_chk"),
-    )
-    csv_docs = (
-        base.withColumn("_line", line)
-        .groupBy("source")
-        .agg(
-            F.concat_ws(
-                "\n",
-                F.lit("doc_id,lang,n_chars,text_chk"),
-                F.concat_ws("\n", F.sort_array(F.collect_list("_line"))),
-            ).alias("content")
-        )
-    )
-    csv_leg = csv_documents_to_rows(
-        csv_docs, "content", header=["doc_id", "lang", "n_chars", "text_chk"]
-    ).select(
-        F.lit("csv").alias("kind"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "lang",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        "text_chk",
-        null_d.alias("gx"),
-        null_d.alias("gy"),
-    )
-
-    # jsonl: one escaped JSON object per line, real text both ways
-    jline = F.to_json(F.struct("doc_id", "lang", "n_chars", "text"))
-    j_docs = (
-        docs.withColumn("_line", jline)
-        .groupBy("source")
-        .agg(F.concat_ws("\n", F.sort_array(F.collect_list("_line"))).alias("content"))
-    )
-    jsonl_leg = jsonl_documents_to_rows(
-        j_docs, "content", "doc_id BIGINT, lang STRING, n_chars BIGINT, text STRING"
-    ).select(
-        F.lit("jsonl").alias("kind"),
-        "doc_id",
-        "lang",
-        "n_chars",
-        F.md5(F.encode("text", "UTF-8")).alias("text_chk"),
-        null_d.alias("gx"),
-        null_d.alias("gy"),
-    )
-
-    # zip: one archive per source; text bytes are the entry payload,
-    # metadata rides the entry path ("{lang}/{doc_id}_{n_chars}.txt")
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        import io
-        import zipfile
-
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w") as zf:
-            for _, row in pdf.sort_values("doc_id").iterrows():
-                zf.writestr(f"{row.lang}/{row.doc_id}_{row.n_chars}.txt", row.text)
-        return pd.DataFrame({"content": [buf.getvalue()]})
-
-    zips = docs.groupBy("source").applyInPandas(pack, "content BINARY")
-    zip_leg = zip_reader(zips, "content").select(
-        F.lit("zip").alias("kind"),
-        F.regexp_extract("name", r"/(\d+)_", 1).cast("long").alias("doc_id"),
-        F.regexp_extract("name", r"^([^/]+)/", 1).alias("lang"),
-        F.regexp_extract("name", r"_(\d+)\.txt$", 1).cast("long").alias("n_chars"),
-        F.md5("content").alias("text_chk"),
-        null_d.alias("gx"),
-        null_d.alias("gy"),
-    )
-
-    # geojson: one FeatureCollection per source; to_json builds each
-    # feature (escaping-safe, unlike raw concat), st_x/st_y prove the
-    # coordinates survived the parse
-    gx = ((F.col("doc_id") % 360) - 180).cast("double")
-    gy = ((F.col("doc_id") % 170) - 85).cast("double")
-    feature = F.to_json(
-        F.struct(
-            F.lit("Feature").alias("type"),
-            F.col("doc_id").cast("string").alias("id"),
-            F.struct(
-                F.lit("Point").alias("type"),
-                F.array(gx, gy).alias("coordinates"),
-            ).alias("geometry"),
-            F.struct(
-                F.col("lang"),
-                F.col("n_chars").cast("string").alias("n_chars"),
-                F.col("text_chk"),
-            ).alias("properties"),
-        )
-    )
-    g_docs = (
-        base.withColumn("_f", feature)
-        .groupBy("source")
-        .agg(
-            F.concat(
-                F.lit('{"type":"FeatureCollection","features":['),
-                F.concat_ws(",", F.sort_array(F.collect_list("_f"))),
-                F.lit("]}"),
-            ).alias("content")
-        )
-    )
-    geo_leg = geojson_reader(g_docs, "content").select(
-        F.lit("geojson").alias("kind"),
-        F.col("feature_id").cast("long").alias("doc_id"),
-        F.col("properties").getItem("lang").alias("lang"),
-        F.col("properties").getItem("n_chars").cast("long").alias("n_chars"),
-        F.col("properties").getItem("text_chk").alias("text_chk"),
-        K.st_x("geom").alias("gx"),
-        K.st_y("geom").alias("gy"),
-    )
-
-    return (
-        csv_leg.unionByName(jsonl_leg).unionByName(zip_leg).unionByName(geo_leg)
-    )
-
-
-S_DOC_ROUNDTRIP_ORACLE = """
-SELECT 'csv' AS kind, doc_id, lang, n_chars, md5(text) AS text_chk,
-       CAST(NULL AS DOUBLE) AS gx, CAST(NULL AS DOUBLE) AS gy
-FROM documents
-UNION ALL
-SELECT 'jsonl', doc_id, lang, n_chars, md5(text),
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-FROM documents
-UNION ALL
-SELECT 'zip', doc_id, lang, n_chars, md5(text),
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-FROM documents
-UNION ALL
-SELECT 'geojson', doc_id, lang, n_chars, md5(text),
-       CAST((doc_id % 360) - 180 AS DOUBLE),
-       CAST((doc_id % 170) - 85 AS DOUBLE)
-FROM documents
-"""
-
-
 # --- j2_overlay_surface (authored round 17 — registered LATE r17,
 # PLANS.md scan item 2 / registry.py addendum) --------------------------------
 # j2_intersection_percent_by_area / j2_concave_overlay_percent /
@@ -3439,81 +2287,3 @@ register(
     headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
     tags=("J2", "overlay", "surface"),
 )(j2_overlay_surface)
-
-
-CANDIDATES: dict[str, tuple] = {
-    # Dict order IS the promotion rank (kept in sync by review finding
-    # r14). The entire r17 plan head left the queue at round 17:
-    # p_record_ops_surface / g_scalar_geometry_surface /
-    # corpus_version_diff / corpus_drift_psi / llm_novelty_scores /
-    # layout_zorder_pruning REGISTERED (above, with their retirement
-    # partners named in the ledger); stream_window_agg_surface_wide
-    # moved into queries_streaming.py as the registered surface;
-    # the two KAT-pinned rows swapped into the registered
-    # llm_codec_throughput / llm_audio_spectral (queries_llm.py).
-    # The r18 consolidation surface heads the rank (registered FIRST
-    # at r18, retiring s1/s2/s8/s9 — its authoring comment above names
-    # them; the 4 retirements fund the 4 llm promotions below it under
-    # add-one-retire-one). j2_overlay_surface left the queue LATE r17:
-    # registered early (registry.py addendum) when the dissolve rect
-    # fast path changed its retirees' code.
-    "s_document_roundtrip_surface": (
-        s_document_roundtrip_surface,
-        S_DOC_ROUNDTRIP_ORACLE,
-    ),
-    # the standing queue (round-14 ledger rank), heads r18 after the
-    # surface:
-    "llm_kmeans_fixed_cells": (llm_kmeans_fixed_cells, KMEANS_ORACLE),
-    # llm_anchor_text_topk left the queue round 17: widened into the
-    # registered llm_link_graph_rank surface (anchor union leg, above).
-    "llm_token_budget_mix": (llm_token_budget_mix, TOKEN_BUDGET_ORACLE),
-    "llm_fuzzy_title_pairs": (llm_fuzzy_title_pairs, FUZZY_ORACLE),
-    "llm_pq_codes": (llm_pq_codes, PQ_ORACLE),
-    "llm_bitext_margin_pairs": (llm_bitext_margin_pairs, BITEXT_ORACLE),
-    # llm_sentence_stats left the queue late round 17: absorbed into
-    # the due llm_repetition_ratios row (chained projection, above).
-    # llm_perplexity_buckets left the queue late round 17: absorbed
-    # into the due llm_lm_entropy_surface (ppl_bucket column, above).
-    "llm_dsir_logweights": (llm_dsir_logweights, DSIR_ORACLE),
-    # llm_bloom_decontaminate left the queue late round 17: absorbed
-    # into the due llm_decontamination_surface (third leg, above).
-    "llm_cms_token_freq": (llm_cms_token_freq, CMS_ORACLE),
-    "llm_length_outliers": (
-        llm_length_outliers,
-        LENGTH_OUTLIERS_ORACLE,
-    ),
-    "cms_join_size_report": (
-        cms_join_size_report,
-        JOIN_SIZE_ORACLE,
-    ),
-    # events_conversion_funnel / events_cohort_retention left the
-    # queue round 16: REGISTERED (retiring funnel_view_click_purchase /
-    # cohort_daily_retention — ledger items 3-4).
-    # llm_curation_funnel / llm_readability_scores /
-    # llm_length_quantile_sketch left the queue round 15: registered as
-    # llm_source_rule_funnel / widened into llm_quality_filter_score /
-    # widened into llm_length_percentiles respectively.
-    # llm_host_quality_wide / llm_sample_surface_wide left the queue
-    # round 16: the r15-staged combined rows are the REGISTERED
-    # llm_host_quality_report / llm_sample_surface (ledger items 1-2,
-    # zero net; the llm_host_communities / llm_priority_sample_report
-    # standalone fns stay as their components).
-    "llm_packing_efficiency": (
-        llm_packing_efficiency,
-        PACKING_ORACLE,
-    ),
-    "llm_vocab_coverage_report": (
-        llm_vocab_coverage_report,
-        VOCAB_COVERAGE_ORACLE,
-    ),
-    "llm_stride_interleave_order": (
-        llm_stride_interleave_order,
-        STRIDE_ORACLE,
-    ),
-    "llm_corpus_overlap_report": (
-        llm_corpus_overlap_report,
-        CORPUS_OVERLAP_ORACLE,
-    ),
-    "llm_bpe_merges": (llm_bpe_merges, BPE_ORACLE),
-}
-

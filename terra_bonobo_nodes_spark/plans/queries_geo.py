@@ -131,12 +131,11 @@ ltile AS (
 # --- G2/G5/G6/G8: scalar geometry kernels -----------------------------------
 # The FOUR standalone scalar-geometry rows (g2_point_from_attributes,
 # g5_force_2d, g6_simplify_zigzag, g8_subdivide_area) RETIRED round 17
-# into the registered g_scalar_geometry_surface
-# (plans/queries_candidates.py) — each row's closed-form oracle check
-# kept verbatim as a column at ONE supplier grain. g9 stays its own
-# row: a line x polygon overlay JOIN against the tile layer, not a
-# scalar kernel. Unit coverage for each kernel is unchanged in
-# tests/test_spatial.py / test_geo_kernels.py. Ledger item 2.
+# into the registered g_scalar_geometry_surface — each row's
+# closed-form oracle check kept verbatim as a column at ONE supplier
+# grain. g9 stays its own row: a line x polygon overlay JOIN against
+# the tile layer, not a scalar kernel. Unit coverage for each kernel is
+# unchanged in tests/test_spatial.py / test_geo_kernels.py.
 
 
 # --- G1+G3: GeoJSON parse -> centroid -> round-trip -------------------------
@@ -478,11 +477,10 @@ def j1_boolean_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- J2: intersection percent by area ---------------------------------------
 # The THREE standalone J2 rows (j2_intersection_percent_by_area,
 # j2_concave_overlay_percent, j2_dissolve_overlapping_layer) RETIRED
-# LATE round 17 into the registered j2_overlay_surface
-# (plans/queries_candidates.py) — identical (c_custkey,
-# intersection_percent) grain, each leg's fixture and oracle text
-# verbatim under a strategy literal ('pairwise' / 'concave' /
-# 'dissolve'). Registered early (the r18 ledger item 2) because the
+# LATE round 17 into the registered j2_overlay_surface — identical
+# (c_custkey, intersection_percent) grain, each leg's fixture and
+# oracle text verbatim under a strategy literal ('pairwise' /
+# 'concave' / 'dissolve'). Registered in round 17 because the
 # dissolve rect fast path (operators/spatial.py) changed the three
 # rows' code and the surface is where their changed-code driver row
 # lands. The shared fixtures above (_customer_rects / _tile_layer /
@@ -807,7 +805,7 @@ def g7_transform_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # spatial_zorder_code RETIRED round 17 into the registered
-# layout_zorder_pruning (plans/queries_candidates.py): the pruning
-# measurement exercises the SAME morton_code interleave (its zone maps
-# key on the code) AND adds the scan-count value the code row lacked —
-# how many files a z-range probe actually touches. Ledger item 4.
+# layout_zorder_pruning: the pruning measurement exercises the SAME
+# morton_code interleave (its zone maps key on the code) AND adds the
+# scan-count value the code row lacked — how many files a z-range
+# probe actually touches.

@@ -2451,8 +2451,8 @@ def llm_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   exp() difference.
 
 # llm_semantic_dedup (the one-hot literal-codebook SemDeDup row,
-# registered r12) RETIRED round 14: llm_semdedup_kmeans_e2e
-# (plans/queries_candidates.py) occupies its slot — same vec_id grain,
+# registered r12) RETIRED round 14: llm_semdedup_kmeans_e2e occupies
+# its slot — same vec_id grain,
 # strictly stronger (codebook training, assignment, pairing,
 # components and election ALL distributed via kmeans_fixed cells and
 # the semantic_dedup(cell_col=) seam, oracle-replayed end to end).

@@ -143,13 +143,12 @@ def a4_sql_text_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 # p2_generate_identifier_md5, p3_exclude_attributes,
 # p4_filter_attributes, p5_filter_by_properties, p6_map_properties,
 # p7_min_array_attribute, p9_drop_identifier, p11_accessibility_ratio)
-# RETIRED round 17 into the registered p_record_ops_surface
-# (plans/queries_candidates.py) — every op's oracle check kept verbatim
-# as a column at ONE lineitem grain (the fn_scalar_surface /
-# g7_transform_surface consolidation precedent; VERDICT_r15 "What's
-# wrong" #1). Each operator keeps its own unit coverage in
-# tests/test_operators.py; P10 stays below — a real parser, not a
-# projection. Ledger item 1.
+# RETIRED round 17 into the registered p_record_ops_surface — every
+# op's oracle check kept verbatim as a column at ONE lineitem grain
+# (the fn_scalar_surface / g7_transform_surface consolidation
+# precedent; VERDICT_r15 "What's wrong" #1). Each operator keeps its
+# own unit coverage in tests/test_operators.py; P10 stays below — a
+# real parser, not a projection.
 
 
 # --- P10: hstore parsing ----------------------------------------------------
@@ -976,13 +975,12 @@ def t5_user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # funnel_view_click_purchase RETIRED round 16 into the registered
-# events_conversion_funnel (plans/queries_candidates.py — the
-# ordered-step generalization: same events source, any step list, one
-# groupBy(user) pass + sorted-array fold instead of a join-back per
-# stage). cohort_daily_retention RETIRED the same round into the
+# events_conversion_funnel (the ordered-step generalization: same
+# events source, any step list, one groupBy(user) pass + sorted-array
+# fold instead of a join-back per stage). cohort_daily_retention RETIRED the same round into the
 # registered events_cohort_retention (the weekly retention triangle at
 # report grain; operators/funnels.py carries both operators with their
-# SQL mirrors, pinned by tests/test_funnels.py). Ledger items 3-4.
+# SQL mirrors, pinned by tests/test_funnels.py).
 
 
 @register(
@@ -1314,41 +1312,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq.where(F.col("next_type").isNotNull())
         .groupBy("event_type", "next_type")
         .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-# scd2_user_value_history RETIRED round 17 into the registered
-# corpus_version_diff (plans/queries_candidates.py): both are
-# key-versioned churn reports — SCD2's lead()-window validity intervals
-# are the per-key view of the same added/removed/changed verdict the
-# snapshot diff (operators/cdc.snapshot_diff) surfaces at corpus grain,
-# and the diff row additionally measures the full-outer-join promotion
-# gate the SCD2 row never reached. The fn stays below as an
-# unregistered component (the asof_join pairing for point-in-time
-# reads is unchanged). Ledger item 3.
-def scd2_user_value_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension (type 2) history: each purchase
-    becomes a versioned row whose validity interval closes when the
-    next one arrives (open end = max bigint, is_current flag) — the
-    warehouse pattern for as-of attribute lookup, built with one
-    lead() window per key. Pairs with asof_join for point-in-time
-    reads."""
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("event_type") == "purchase")
-        .select(
-            "user_id", "event_id",
-            F.round("value", 4).alias("value"),
-            F.unix_timestamp("ts").alias("valid_from"),
-            F.col("ts"),
-        )
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    h = ev.withColumn("valid_to", F.lead("valid_from").over(w))
-    return h.select(
-        "user_id", "event_id", "value", "valid_from",
-        F.coalesce("valid_to", F.lit(9223372036854775807)).alias("valid_to"),
-        F.col("valid_to").isNull().alias("is_current"),
     )
 
 

@@ -14,8 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_ram_capped() -> str:
+    """Half of the host's physical memory, capped at 16g."""
+    with open("/proc/meminfo", encoding="ascii") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{min(16 * 1024, kb // 2048)}m"
+
+
 def get_spark(app_name: str = "terra_bonobo_nodes_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -37,36 +44,25 @@ def get_spark(app_name: str = "terra_bonobo_nodes_spark") -> SparkSession:
         # local[N] keeps every executor task inside the ONE driver JVM,
         # so the heap must be sized for N concurrent tasks' execution
         # memory plus cached/checkpointed state; 8g showed multi-second
-        # GC spikes (isolated 2.4s queries reading 5s+ mid-bench, one
-        # 45s outlier) that 16g removes (r17 A/B: headline bench total
-        # -4s on identical code). On a real cluster executor memory is
-        # provisioned per executor, not here; the env var still
-        # overrides for constrained hosts.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # GC spikes on a 32-core host that 16g removed. The default
+        # takes half the host's RAM, capped at that 16g, so the heap
+        # never exceeds what a small host has. On a real cluster
+        # executor memory is provisioned per executor, not here.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _half_ram_capped(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Prefer shuffled-hash over sort-merge when a side's per-
-        # partition build fits memory (guide §3.1/§9): hash probe skips
-        # both sides' sorts. The AQE threshold additionally rewrites an
-        # already-planned SMJ to SHJ at runtime when every post-shuffle
-        # partition is under it; 64m matches the broadcast threshold's
-        # memory rationale (bounded per-task build). TIMING CLAIM
-        # RETRACTED (OPTIMIZATION_r17.md §10): the originally-cited
-        # "18.13s -> 16.92s" A/B was host-drift bias — the controlled
-        # alternating-order re-validation read 16.80 vs 16.73s, a
-        # wash at this fixture scale. Kept as the optimization guide's
-        # §9 baseline only: results are join-algorithm-independent
-        # (hash-verified), sort-merge still plans wherever a build
-        # side could not fit (the 64m threshold bounds it), and both
-        # knobs take env overrides so a deployment where an SHJ build
-        # side might not fit can flip back without a code change.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_PREFER_SORTMERGEJOIN", "false"),
-        )
+        # Prefer shuffled-hash over sort-merge joins, and let AQE rewrite
+        # a planned sort-merge join to shuffled-hash when every post-
+        # shuffle partition is under 64m. The timing A/B was a wash;
+        # results are join-algorithm-independent, and the 64m bound
+        # keeps each task's hash build side bounded.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_SHJ_LOCAL_MAP_THRESHOLD", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
     )
     spark = builder.getOrCreate()

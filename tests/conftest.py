@@ -64,7 +64,6 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from terra_bonobo_nodes_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
     s = get_spark("tests")
     yield s
 
@@ -101,6 +100,20 @@ def _canon(v):
     if isinstance(v, dict):
         return tuple(sorted((k, _canon(x)) for k, x in v.items()))
     return v
+
+
+def assert_layout_invariant(spark, build) -> None:
+    """Build and collect ``build()`` at the session's shuffle partition
+    count and again at 7; the row multisets must match bit-for-bit (a
+    result that moves with the physical layout defeats every oracle)."""
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    baseline = sorted(tuple(r) for r in build().collect())
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        hostile = sorted(tuple(r) for r in build().collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    assert baseline == hostile
 
 
 def assert_matches_oracle(spark_df, duck_con, sql: str, check_exact: bool = True):

@@ -109,6 +109,8 @@ def test_null_embeddings_dropped(spark, corpus):
     b = bitext.margin_knn_pairs(noisy, tgt, k=2, min_margin=0.0,
                                 mutual_only=False).count()
     assert a == b
+    for s, t in ((src.limit(0), tgt), (src, tgt.limit(0))):  # empty side
+        assert bitext.margin_knn_pairs(s, t, k=2, min_margin=1.0).collect() == []
 
 
 def test_sql_mirror_value_parity(spark, corpus):

@@ -92,6 +92,7 @@ def test_stops_early_when_fully_fused(spark):
     got = bpe.bpe_learn(_docs(spark, texts), n_merges=10)
     want, _ = _ref_learn(texts, 10)
     assert got == want and len(got) == 1  # one merge fuses everything
+    assert bpe.bpe_learn(_docs(spark, []), n_merges=10) == []  # nothing to fuse
 
 
 @given(
@@ -165,3 +166,14 @@ def test_rejects_bad_n_merges(spark):
         bpe.bpe_learn(_docs(spark, ["x"]), n_merges=0)
     with pytest.raises(ValueError):
         bpe.bpe_merges_sql("SELECT 1", "text", 0, "x")
+
+
+def test_learner_invariant_under_shuffle_layout(spark):
+    """Each round's argmax tie boundary over the documents fixture must
+    not move with the shuffle partition count."""
+    from terra_bonobo_nodes_spark.tables import load_table
+    from tests.conftest import SF_DIR, assert_layout_invariant
+
+    assert_layout_invariant(spark, lambda: spark.createDataFrame(
+        bpe.bpe_learn(load_table(spark, SF_DIR, "documents"), "text", n_merges=8),
+        "merge_rank int, sym_a string, sym_b string, pair_count long"))

@@ -312,3 +312,18 @@ def test_set_ops_guards_and_degenerate(spark):
         D.kmv_set_ops(_two_group_df(spark, {"a": ["x"]}), k=1)
     one = D.kmv_sketch(_two_group_df(spark, {"a": ["x", "y"]}), k=8)
     assert D.kmv_set_ops(one, k=8).count() == 0  # no pairs from one group
+    empty = D.kmv_sketch(_two_group_df(spark, {}), k=8)
+    assert D.kmv_set_ops(empty, k=8).collect() == []
+
+
+def test_set_ops_invariant_under_shuffle_layout(spark):
+    """The bottom-k union re-rank over the events fixture must not move
+    with the shuffle partition count."""
+    from terra_bonobo_nodes_spark.tables import load_table
+    from tests.conftest import SF_DIR, assert_layout_invariant
+
+    def ops():
+        ev = load_table(spark, SF_DIR, "events")
+        return D.kmv_set_ops(D.kmv_sketch(ev, "user_id", "event_type", k=64), 64)
+
+    assert_layout_invariant(spark, ops)

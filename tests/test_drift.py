@@ -154,6 +154,7 @@ def test_robust_outliers_constant_group_and_nulls(spark):
            robust_outliers(df, "v", "g").collect()}
     # MAD 0: the deviating row flags at any k; NULL rows are dropped
     assert got == {(7, False), (8, True)}
+    assert robust_outliers(df.limit(0), "v", "g").collect() == []
     with _pt.raises(ValueError):
         robust_outliers(df, "v", "g", k_den=0)
 
@@ -182,3 +183,14 @@ def test_robust_outliers_sql_mirror(spark, duck):
         ).fetchall()
     )
     assert got == want
+
+
+def test_robust_outliers_invariant_under_shuffle_layout(spark):
+    """The two rank-window median passes must not move with the shuffle
+    partition count."""
+    from terra_bonobo_nodes_spark.operators.quality import robust_outliers
+    from terra_bonobo_nodes_spark.tables import load_table
+    from tests.conftest import SF_DIR, assert_layout_invariant
+
+    assert_layout_invariant(spark, lambda: robust_outliers(
+        load_table(spark, SF_DIR, "documents"), "n_chars", "source", k_num=5))

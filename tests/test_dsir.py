@@ -4,6 +4,7 @@ ratio of a target sample vs the raw corpus."""
 from __future__ import annotations
 
 from terra_bonobo_nodes_spark.llm.corpus import dsir_logweights
+from terra_bonobo_nodes_spark.plans.queries_llm import TOKS_SQL
 
 # Two "dialects" with disjoint vocabulary; target is drawn from A.
 _A = [
@@ -48,6 +49,8 @@ def test_empty_and_null_text(spark):
         assert rows[i]["dsir_n_features"] == 0
         assert rows[i]["dsir_logweight"] == 0.0
     assert rows[0]["dsir_n_features"] == 11  # 6 unigrams + 5 bigrams
+    assert dsir_logweights(raw.limit(0), target).collect() == []
+    assert dsir_logweights(raw.limit(0), target.limit(0)).collect() == []
 
 
 def test_deterministic(spark):
@@ -68,3 +71,68 @@ def test_bucket_collisions_tolerated(spark):
     rows = _run(spark, _A + _B, _A, buckets=2)
     assert all(abs(r["dsir_logweight"]) < 100.0 for r in rows.values())
     assert all(r["dsir_n_features"] == 11 for r in rows.values())
+
+
+_BUCKETS = 10_000
+
+# DuckDB replay over the documents fixture with its English slice as
+# the target: identical hashed buckets (the md5 hash32 mirror), add-one
+# smoothing and DECIMAL(20,6)-quantized log ratios, so weights are exact.
+_DSIR_SQL = f"""
+WITH toks AS (
+  SELECT doc_id, lang, {TOKS_SQL} AS t FROM documents
+), feats AS (
+  SELECT doc_id, lang,
+         unnest(list_concat(t,
+           list_transform(range(1, greatest(len(t) - 1, 0) + 1),
+                          i -> t[i] || ' ' || t[i + 1]))) AS f
+  FROM toks
+), fb AS (
+  SELECT doc_id, lang,
+         (('0x' || substr(md5(f), 1, 8))::BIGINT % {_BUCKETS}) AS b
+  FROM feats
+), fc AS (
+  SELECT doc_id, b, count(*) AS c FROM fb GROUP BY 1, 2
+), q AS (
+  SELECT b, sum(c) AS qc FROM fc GROUP BY 1
+), tgt AS (
+  SELECT b, count(*) AS tc FROM fb WHERE lang = 'en' GROUP BY 1
+), model AS (
+  SELECT coalesce(q.b, tgt.b) AS b,
+         coalesce(qc, 0) AS qc, coalesce(tc, 0) AS tc
+  FROM q FULL OUTER JOIN tgt ON q.b = tgt.b
+), tot AS (
+  SELECT sum(qc) AS qt, sum(tc) AS tt FROM model
+), lr AS (
+  SELECT b,
+         CAST(ln(CAST(tc + 1 AS DOUBLE) / CAST(tt + {_BUCKETS} AS DOUBLE))
+              AS DECIMAL(20,6))
+       - CAST(ln(CAST(qc + 1 AS DOUBLE) / CAST(qt + {_BUCKETS} AS DOUBLE))
+              AS DECIMAL(20,6)) AS lr
+  FROM model CROSS JOIN tot
+), sc AS (
+  SELECT fc.doc_id, sum(c) AS m, sum(lr * c) AS lw
+  FROM fc JOIN lr ON lr.b = fc.b GROUP BY 1
+)
+SELECT d.doc_id,
+       CAST(coalesce(m, 0) AS BIGINT) AS dsir_n_features,
+       CAST(coalesce(lw, 0) AS DOUBLE) AS dsir_logweight
+FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id
+"""
+
+
+def test_matches_duckdb_mirror(spark, duck):
+    from pyspark.sql import functions as F
+
+    from terra_bonobo_nodes_spark.tables import load_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text", "lang")
+    target = docs.where(F.col("lang") == "en").select("doc_id", "text")
+    out = dsir_logweights(docs.select("doc_id", "text"), target, buckets=_BUCKETS)
+    got = sorted(
+        (r["doc_id"], r["dsir_n_features"], r["dsir_logweight"]) for r in out.collect()
+    )
+    want = sorted(duck.execute(_DSIR_SQL).fetchall())
+    assert len(got) == len(want) > 0
+    assert got == want

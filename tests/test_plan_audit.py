@@ -10,6 +10,9 @@ first, not on a 100 TB cluster.
 
 from __future__ import annotations
 
+import contextlib
+import io
+
 import pytest
 
 from terra_bonobo_nodes_spark.plans.registry import all_queries
@@ -46,7 +49,7 @@ CROSS_JOIN_OK: dict[str, str] = {
     ),
     "j3_intersection_geom_area": "same broadcast spatial-join shape",
     "g9_line_clip_length": "same broadcast spatial-join shape",
-    # round 17 promotions (moved from CANDIDATE_CROSS_JOIN_OK):
+    # round 17 promotions:
     "layout_zorder_pruning": (
         "probe_scan_counts is a broadcast product of two BOUNDED"
         " per-FILE sides (6 probes x 64 zone rows) — documented in"
@@ -304,47 +307,23 @@ def test_quality_filter_scoring_plans_no_python_eval(spark):
     assert "*(" in plan  # whole-stage-codegen stage markers
 
 
-# --- staged candidates get the cartesian audit BEFORE promotion --------------
-# A staged row that plans an accidental cross join would only be caught
-# at registration (when the registered-query sweep above picks it up) —
-# after its driver slot is already budgeted. Audit the queue too, with
-# the same documented-intent allowlist discipline.
-
-CANDIDATE_CROSS_JOIN_OK: dict[str, str] = {
-    # (layout_zorder_pruning / corpus_drift_psi promoted round 17 —
-    # their entries moved to the registered CROSS_JOIN_OK above;
-    # j2_overlay_surface registered late r17, entry moved likewise)
-    "llm_corpus_overlap_report": (
-        "the group-pair frame is groups x groups under an inequality"
-        " (5 event types -> 10 pairs), broadcast by construction —"
-        " sketch rows, never raw data; needs CROSS_JOIN_OK at"
-        " registration"
-    ),
-    "llm_dsir_logweights": (
-        "single-row feature-total scalars broadcast into the"
-        " per-doc weight projection (llm/corpus.py::dsir_logweights)"
-    ),
-    "cms_join_size_report": (
-        "two 1-row frames crossJoined per measured join (the sketch"
-        " estimate scalar x the exact-truth scalar)"
-    ),
-    # (llm_perplexity_buckets absorbed late r17 into the registered
-    # llm_lm_entropy_surface — its 1-row bucket-cutoff scalar is noted
-    # on that row's CROSS_JOIN_OK entry above)
-}
+def _formatted_plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
-def _candidates():
-    from terra_bonobo_nodes_spark.plans.queries_candidates import CANDIDATES
+def test_j2_overlay_surface_plan_shape(spark):
+    """Three overlay strategies on one row: no cartesian pair
+    generation (envelope/grid candidates only), no row-at-a-time
+    Python, and both customer scans prune to their used columns."""
+    from terra_bonobo_nodes_spark.plans.queries_candidates import (
+        j2_overlay_surface,
+    )
 
-    return CANDIDATES
-
-
-@pytest.mark.parametrize("name", sorted(_candidates()))
-def test_candidate_no_accidental_cartesian(name, spark):
-    fn, _ = _candidates()[name]
-    plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-    has_cross = "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
-    if name in CANDIDATE_CROSS_JOIN_OK:
-        return
-    assert not has_cross, f"candidate {name} plans a cartesian join:\n{plan[:2000]}"
+    plan = _formatted_plan(j2_overlay_surface(spark, SF_DIR))
+    assert "Cartesian" not in plan
+    assert "BatchEvalPython" not in plan
+    assert "struct<c_custkey:bigint,c_acctbal:double>" in plan
+    assert "struct<c_custkey:bigint>" in plan

@@ -144,6 +144,42 @@ def test_registry_capacity_cap():
     )
 
 
+def test_every_row_function_is_registered():
+    """Rows are registered or they do not exist: every top-level
+    ``(spark, sf_dir)`` function in plans/queries_*.py is a registered
+    row's function or reachable from one through the names top-level
+    bindings reference, so no unchecked queue builds up beside the
+    registry."""
+    import ast
+    from pathlib import Path
+
+    plans = Path(__file__).resolve().parents[1] / "terra_bonobo_nodes_spark" / "plans"
+    refs: dict[str, set[str]] = {}
+    row_fns: set[str] = set()
+    for path in plans.glob("queries_*.py"):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef):
+                names = [node.name]
+                if [a.arg for a in node.args.args] == ["spark", "sf_dir"]:
+                    row_fns.add(node.name)
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            for name in names:
+                refs.setdefault(name, set()).update(
+                    getattr(n, "id", None) or getattr(n, "attr", None)
+                    for n in ast.walk(node)
+                )
+    stack, reached = [q.spark_fn.__name__ for q in QS.values()], set()
+    while stack:
+        name = stack.pop()
+        if name not in reached:
+            reached.add(name)
+            stack.extend(refs.get(name, ()))
+    assert not row_fns - reached, f"unregistered row functions: {sorted(row_fns - reached)}"
+
+
 def test_budget_arithmetic_holds():
     """due + changed + new must fit in the cap — if a future round
     over-subscribes, this fails at authoring time instead of silently

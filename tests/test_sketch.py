@@ -94,6 +94,7 @@ def test_build_tolerates_null_tokens_and_estimate_null_is_null(spark):
     )
     clean = spark.createDataFrame([("a",), ("a",)], "token string")
     assert cms_build(noisy, d=2, w=64) == cms_build(clean, d=2, w=64)
+    assert cms_build(clean.limit(0), d=2, w=64) == [[0] * 64, [0] * 64]
     built = cms_build(clean, d=2, w=64)
     df = spark.createDataFrame([(None,)], "token string")
     assert df.select(cms_estimate("token", built).alias("e")).collect()[0]["e"] is None
@@ -285,3 +286,20 @@ def test_inner_product_sql_mirror(spark, duck):
         )
     ).fetchone()
     assert (got["est_join_size"], got["d_used"]) == want
+
+
+def test_inner_product_invariant_under_shuffle_layout(spark):
+    """The d*w cell joins and the min over per-row dots, for a
+    foreign-key join (orders x lineitem) and a skewed self-join (events
+    on user_id), must not move with the shuffle partition count."""
+    from terra_bonobo_nodes_spark.llm.sketch import cms_cells, cms_inner_product
+    from terra_bonobo_nodes_spark.tables import load_table
+    from tests.conftest import SF_DIR, assert_layout_invariant
+
+    def cells(table, col):
+        keys = load_table(spark, SF_DIR, table).select(F.col(col).cast("string").alias("token"))
+        return cms_cells(keys, d=4, w=1 << 18)
+
+    assert_layout_invariant(spark, lambda: cms_inner_product(
+        cells("orders", "o_orderkey"), cells("lineitem", "l_orderkey")
+    ).unionByName(cms_inner_product(cells("events", "user_id"), cells("events", "user_id"))))

@@ -71,6 +71,7 @@ def test_unlisted_sources_dropped_and_guards(spark):
     rows = [(1, "web"), (2, "spam"), (3, "web")]
     out = stride_interleave(_df(spark, rows), {"web": 2}).collect()
     assert sorted(r["doc_id"] for r in out) == [1, 3]
+    assert stride_interleave(_df(spark, []), {"web": 1}).collect() == []
     with pytest.raises(ValueError):
         stride_interleave(_df(spark, rows), {})
     with pytest.raises(ValueError):
@@ -144,6 +145,7 @@ def test_packing_efficiency_null_tokens_and_guard(spark):
     r = packing_efficiency(df, budget=64, n_shards=1).collect()[0]
     assert (r["total_tokens"], r["naive_seqs"], r["packed_seqs"]) == (0, 0, 0)
     assert r["naive_waste_ppm"] == 0  # zero-seq group reports 0, not NULL
+    assert packing_efficiency(df.limit(0), budget=64, n_shards=2).collect() == []
     with _pt.raises(ValueError):
         packing_efficiency(df, budget=0)
 
@@ -171,3 +173,26 @@ def test_packing_efficiency_sql_mirror(spark, duck):
         ).fetchall()
     )
     assert got == want
+
+
+
+def test_invariant_under_shuffle_layout(spark):
+    """Both operators window or roll up per source over the documents
+    fixture: keys and per-source counts must not move with the layout."""
+    from pyspark.sql import functions as F
+
+    from terra_bonobo_nodes_spark.llm.corpus import packing_efficiency
+    from terra_bonobo_nodes_spark.llm.text import tokens
+    from terra_bonobo_nodes_spark.tables import load_table
+    from tests.conftest import SF_DIR, assert_layout_invariant
+
+    def docs():
+        return load_table(spark, SF_DIR, "documents")
+
+    weights = {"en": 4, "fr": 2, "de": 1, "es": 1}
+    assert_layout_invariant(spark, lambda: stride_interleave(
+        docs(), weights, source_col="lang", id_col="doc_id"))
+    n_tokens = F.size(tokens(F.coalesce("text", F.lit("")))).cast("long")
+    assert_layout_invariant(spark, lambda: packing_efficiency(
+        docs().select("doc_id", "source", n_tokens.alias("n_tokens")),
+        budget=512, n_shards=8))

@@ -113,3 +113,4 @@ def test_empty_and_null_text(spark):
     # review finding, pinned regardless of where the hash orders them)
     all_kept = _run(spark, rows, {"a": 1000})
     assert all_kept == {0: 0, 1: 0, 2: 3}
+    assert _run(spark, [], {"a": 10}) == {}

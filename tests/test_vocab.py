@@ -49,16 +49,33 @@ def test_vocab_duplicates_do_not_double_count(spark):
     assert got["web"] == 9  # left join against distinct vocab: no fanout
 
 
+_VC_K = 256  # vocabulary size: the corpus's own top-256 tokens
+
+
+def _vocab_coverage_sql() -> str:
+    """DuckDB mirror of top_tokens + vocab_coverage by lang over
+    ``documents``. The lang spine joins with IS NOT DISTINCT FROM: a
+    plain equi-join never matches a NULL spine row."""
+    from terra_bonobo_nodes_spark.plans.queries_llm import TOKS_SQL
+
+    return f"""
+WITH t AS (SELECT lang, unnest({TOKS_SQL}) AS tok
+           FROM (SELECT lang, coalesce(text, '') AS text FROM documents)),
+v AS (SELECT tok FROM t GROUP BY tok ORDER BY count(*) DESC, tok LIMIT {_VC_K}),
+a AS (SELECT t.lang, count(*) AS n, count(*) - count(v.tok) AS oov
+      FROM t LEFT JOIN v ON t.tok = v.tok GROUP BY t.lang)
+SELECT g.lang, coalesce(a.n, 0) AS n_tokens, coalesce(a.oov, 0) AS n_oov,
+       CASE WHEN a.n > 0 THEN (a.oov * 1000000) // a.n END AS oov_rate_ppm
+FROM (SELECT DISTINCT lang FROM documents) g
+LEFT JOIN a ON g.lang IS NOT DISTINCT FROM a.lang
+"""
+
+
 def test_null_lang_group_matches_oracle(spark):
-    """ADVICE r15 (queries_candidates.py): a NULL lang collapses into a
-    real group on the Spark side (groupBy semantics); the oracle's
-    spine-join must use IS NOT DISTINCT FROM so it reports that group's
-    actual counts instead of (0, 0, NULL)."""
-    from terra_bonobo_nodes_spark.plans.queries_candidates import (
-        VOCAB_COVERAGE_ORACLE,
-        _VC_K,
-    )
-    from terra_bonobo_nodes_spark.llm.text import top_tokens, vocab_coverage
+    """A NULL lang collapses into a real group on the Spark side
+    (groupBy semantics); the mirror's spine-join must use IS NOT
+    DISTINCT FROM so it reports that group's actual counts instead of
+    (0, 0, NULL)."""
 
     rows = [
         (1, "en", "the cat sat"),
@@ -87,7 +104,7 @@ def test_null_lang_group_matches_oracle(spark):
     )
     want = {
         r[0]: (r[1], r[2], r[3])
-        for r in con.execute(VOCAB_COVERAGE_ORACLE).fetchall()
+        for r in con.execute(_vocab_coverage_sql()).fetchall()
     }
     con.close()
     assert got == want
@@ -100,6 +117,8 @@ def test_top_tokens_tiebreak_and_limit(spark):
     )
     got = [(r["token"], r["n"]) for r in top_tokens(df, 2).collect()]
     assert got == [("a", 2), ("b", 2)]  # count tie -> token asc
+    assert top_tokens(df.limit(0), 2).collect() == []
+    assert vocab_coverage(df.limit(0), _vocab(spark, ["a"])).collect() == []
     with pytest.raises(ValueError):
         top_tokens(df, 0)
 
@@ -120,3 +139,17 @@ def test_coverage_plan_broadcasts_vocab(spark):
         .toString()
     )
     assert "BroadcastHashJoin" in plan
+
+
+def test_report_invariant_under_shuffle_layout(spark):
+    """The top-256 boundary and the broadcast coverage join over the
+    documents fixture must not move with the shuffle partition count."""
+    from terra_bonobo_nodes_spark.tables import load_table
+    from tests.conftest import SF_DIR, assert_layout_invariant
+
+    def report():
+        docs = load_table(spark, SF_DIR, "documents").select("lang", "text")
+        vocab = top_tokens(docs, _VC_K).select("token")
+        return vocab_coverage(docs, vocab, group_col="lang")
+
+    assert_layout_invariant(spark, report)
