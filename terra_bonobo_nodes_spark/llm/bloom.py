@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import working_names
 from terra_bonobo_nodes_spark.llm import hashing
 
 _SEED = "tbns-bloom-v1"
@@ -183,15 +184,9 @@ def flag_bloom_contaminated(
     the exact semi-join's broadcast would track benchmark size."""
     if not 1 <= k <= _MAX_K:
         raise ValueError(f"k must be in [1, {_MAX_K}] (one md5 digest)")
-    # the chained selectExpr('*', ...) APPENDS columns — a corpus that
-    # already carries one of the working names would end up with an
-    # ambiguous duplicate (ADVICE r17): fail loudly up front instead
-    clash = {"_bl_toks", "_bl_grams", "_bl_nh"} & set(corpus.columns)
-    if clash:
-        raise ValueError(
-            f"corpus already has reserved working column(s) {sorted(clash)}; "
-            "rename them before flag_bloom_contaminated"
-        )
+    # the chained selectExpr('*', ...) APPENDS columns: the working
+    # names must be free in the corpus or they would shadow its columns
+    toks, grams, nh = working_names(corpus, "_bl_toks", "_bl_grams", "_bl_nh")
     m_bits = len(bloom_bits) * _BITS_PER_WORD
     # ONE parsed expression, not F.lit(list): PySpark's lit() walks the
     # list element-by-element over py4j (~0.7 ms each — 1.5-1.9s of
@@ -218,8 +213,8 @@ def flag_bloom_contaminated(
         f"coalesce(`{tc}`, '')), '[^a-z0-9]+', ' '), ' +', ' ')), ' ')"
     )
     grams_sql = (
-        f"filter(transform(sequence(1, greatest(size(_bl_toks) - {n - 1}, 1)), "
-        f"i -> array_join(slice(_bl_toks, i, {n}), ' ')), g -> g != '')"
+        f"filter(transform(sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
+        f"i -> array_join(slice({toks}, i, {n}), ' ')), g -> g != '')"
     )
 
     def _p(i: int) -> str:
@@ -241,19 +236,19 @@ def flag_bloom_contaminated(
     # must fail membership outright (the _member_from_digest contract)
     member_sql = "(d IS NOT NULL) AND " + " AND ".join(hits)
     n_hits_sql = (
-        f"size(filter(transform(_bl_grams, g -> md5(concat('{_SEED}-', g))), "
+        f"size(filter(transform({grams}, g -> md5(concat('{_SEED}-', g))), "
         f"d -> {member_sql}))"
     )
     cols = [f"`{c.replace('`', '``')}`" for c in corpus.columns]
     pfx = prefix.replace("`", "``")
     return (
-        corpus.selectExpr("*", f"{toks_sql} AS _bl_toks")
-        .selectExpr("*", f"{grams_sql} AS _bl_grams")
-        .selectExpr("*", f"{n_hits_sql} AS _bl_nh")
+        corpus.selectExpr("*", f"{toks_sql} AS {toks}")
+        .selectExpr("*", f"{grams_sql} AS {grams}")
+        .selectExpr("*", f"{n_hits_sql} AS {nh}")
         .selectExpr(
             *cols,
-            f"cast(size(_bl_grams) as long) AS `{pfx}n_ngrams`",
-            f"cast(_bl_nh as long) AS `{pfx}n_hits`",
-            f"(_bl_nh > 0) AS `{pfx}flagged`",
+            f"cast(size({grams}) as long) AS `{pfx}n_ngrams`",
+            f"cast({nh} as long) AS `{pfx}n_hits`",
+            f"({nh} > 0) AS `{pfx}flagged`",
         )
     )

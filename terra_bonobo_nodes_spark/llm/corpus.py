@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import top_per_group, working_names
 from terra_bonobo_nodes_spark.llm.hashing import hash32, hash32_sql
 
 
@@ -204,10 +205,7 @@ def reservoir_sample(
     window's per-group state is the running rank, not the group."""
     order = hash32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
     w = Window.partitionBy(*group_cols).orderBy(order.asc(), F.col(id_col).asc())
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .where(F.col(rank_col) <= n)
-    )
+    return top_per_group(df, w, n, rank_col)
 
 
 def decontaminate_substring(
@@ -308,11 +306,7 @@ def source_quota_sample(
 
     u = hash32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
     w = Window.partitionBy(source_col).orderBy(u.asc(), F.col(id_col).asc())
-    return (
-        df.withColumn("_qrank", F.row_number().over(w))
-        .where(F.col("_qrank") <= cap)
-        .drop("_qrank")
-    )
+    return top_per_group(df, w, cap)
 
 
 def collapse_repeated_tokens(
@@ -493,22 +487,20 @@ def token_budget_sample(
     # materialize the token count ONCE below the window — feeding the
     # tokenization expression to both the projection and the window sum
     # would normalize+tokenize every document twice in the same stage
-    out = df.withColumn("_ntok", n_tok)
+    ntok, bud, before = working_names(df, "_ntok", "_budget", "_before", outputs=["n_tokens"])
+    out = df.withColumn(ntok, n_tok)
     w = (
         Window.partitionBy(source_col)
         .orderBy(u.asc(), F.col(id_col).asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     out = out.withColumns(
-        {
-            "_budget": budget,
-            "_before": F.coalesce(F.sum("_ntok").over(w), F.lit(0)),
-        }
+        {bud: budget, before: F.coalesce(F.sum(ntok).over(w), F.lit(0))}
     )
     return (
-        out.where(F.col("_budget").isNotNull() & (F.col("_before") < F.col("_budget")))
-        .drop("_budget", "_before")
-        .withColumnRenamed("_ntok", "n_tokens")
+        out.where(F.col(bud).isNotNull() & (F.col(before) < F.col(bud)))
+        .drop(bud, before)
+        .withColumnRenamed(ntok, "n_tokens")
     )
 
 
@@ -564,18 +556,19 @@ def stride_interleave(
     w_rank = Window.partitionBy(source_col).orderBy(
         u.asc(), F.col(id_col).asc()
     )
+    wc = working_names(df, "_w", outputs=["src_rank", "interleave_key"])
     out = (
-        df.withColumn("_w", wexpr)
-        .where(F.col("_w").isNotNull())
+        df.withColumn(wc, wexpr)
+        .where(F.col(wc).isNotNull())
         .withColumn("src_rank", F.row_number().over(w_rank) - F.lit(1))
     )
     return out.withColumn(
-        "interleave_key", _interleave_key_expr(int(stride_one))
-    ).drop("_w")
+        "interleave_key", _interleave_key_expr(int(stride_one), wc)
+    ).drop(wc)
 
 
-def _interleave_key_expr(stride_one: int) -> Column:
-    """``(2*src_rank + 1) * stride_one div (2*_w)`` with src_rank
+def _interleave_key_expr(stride_one: int, w_col: str = "_w") -> Column:
+    """``(2*src_rank + 1) * stride_one div (2*w_col)`` with src_rank
     widened BEFORE the *2: row_number yields INT, so the unwidened
     numerator wraps past ~2^30 documents per source and diverges from
     the SQL mirror (which ranks in BIGINT) — ADVICE r15. Kept as a
@@ -583,7 +576,7 @@ def _interleave_key_expr(stride_one: int) -> Column:
     exact production expression against an injected large rank."""
     return F.expr(
         "(2 * CAST(src_rank AS BIGINT) + 1)"
-        f" * CAST({int(stride_one)} AS BIGINT) div (2 * _w)"
+        f" * CAST({int(stride_one)} AS BIGINT) div (2 * {w_col})"
     )
 
 

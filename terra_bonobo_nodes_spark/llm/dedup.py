@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import top_per_group
 from terra_bonobo_nodes_spark.llm.hashing import (
     band_hash_sparksql,
     hash32,
@@ -114,11 +115,7 @@ def exact_dedup(
 ) -> DataFrame:
     """Keep one row per normalized-text fingerprint (min id wins)."""
     w = Window.partitionBy(fingerprint_col(text_col)).orderBy(F.col(id_col).asc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return top_per_group(df, w, 1)
 
 
 def exact_dup_groups(

@@ -61,6 +61,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import top_per_group
 from terra_bonobo_nodes_spark.llm import hashing
 
 _SEED = "tbns-distinct-v1"
@@ -121,10 +122,7 @@ def kmv_sketch(
         .where(F.col("h").isNotNull())
         .distinct()
     )
-    w = Window.partitionBy("group").orderBy("h")
-    return hashed.select(
-        "group", "h", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+    return top_per_group(hashed, Window.partitionBy("group").orderBy("h"), k, "rank")
 
 
 def kmv_merge(a: DataFrame, b: DataFrame, k: int) -> DataFrame:
@@ -135,10 +133,7 @@ def kmv_merge(a: DataFrame, b: DataFrame, k: int) -> DataFrame:
     there too), so re-ranking the unioned sketch rows reproduces
     ``kmv_sketch`` over the unioned raw data bit-for-bit."""
     both = a.select("group", "h").unionByName(b.select("group", "h")).distinct()
-    w = Window.partitionBy("group").orderBy("h")
-    return both.select(
-        "group", "h", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+    return top_per_group(both, Window.partitionBy("group").orderBy("h"), k, "rank")
 
 
 def kmv_estimate(sketch: DataFrame, k: int) -> DataFrame:
@@ -402,10 +397,7 @@ def kmv_set_ops(sketch: DataFrame, k: int) -> DataFrame:
         .groupBy("_ga", "_gb", "h")
         .agg(F.max("_in_a").alias("_a"), F.max("_in_b").alias("_b"))
     )
-    w = Window.partitionBy("_ga", "_gb").orderBy("h")
-    merged = both.select(
-        "_ga", "_gb", "h", "_a", "_b", F.row_number().over(w).alias("_rk")
-    ).where(F.col("_rk") <= k)
+    merged = top_per_group(both, Window.partitionBy("_ga", "_gb").orderBy("h"), k, "_rk")
     agg = merged.groupBy("_ga", "_gb").agg(
         F.count(F.lit(1)).alias("union_size"),
         F.max(F.when(F.col("_rk") == k, F.col("h"))).alias("_hk"),

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import top_per_group
+
 
 def embedding_gram(
     df: DataFrame,
@@ -115,12 +117,9 @@ def label_centroid_outliers(
         Window.partitionBy(label_col)
         .orderBy(F.col("dist").desc(), F.col(id_col).asc())
     )
-    return (
-        joined.withColumn("dist", F.round(dist, round_dp))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(label_col, id_col, "dist", "rank")
-    )
+    return top_per_group(
+        joined.withColumn("dist", F.round(dist, round_dp)), w, k, "rank"
+    ).select(label_col, id_col, "dist", "rank")
 
 
 def pca_components(gram: DataFrame, dim: int, n_components: int) -> np.ndarray:

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from terra_bonobo_nodes_spark.columns import working_names
 from terra_bonobo_nodes_spark.llm.urls import host_of
 
 _RULES_SCHEMA = T.StructType(
@@ -185,19 +186,16 @@ def flag_robots_disallowed(
     host-grain table broadcasts into a single left join, and the
     longest-match decision is a higher-order fold over the matched
     rules — no shuffle of the document table at all (the
-    flag_blocked_hosts zero-doc-shuffle convention). Internal columns
-    use the reserved ``_rb_`` prefix; a docs column named ``_rb_*``
-    or ``out_col`` would be overwritten — don't do that."""
+    flag_blocked_hosts zero-doc-shuffle convention)."""
+    h, p, host_rules = working_names(docs, "_rb_h", "_rb_p", "_rb_rules", outputs=[out_col])
     by_host = rules.groupBy("host").agg(
-        F.collect_list(F.struct("plen", "allow", "regex")).alias("_rb_rules")
-    ).withColumnRenamed("host", "_rb_h")
-    d = docs.withColumns(
-        {"_rb_h": host_of(F.col(url_col)), "_rb_p": path_of(F.col(url_col))}
-    )
-    j = d.join(F.broadcast(by_host), "_rb_h", "left")
+        F.collect_list(F.struct("plen", "allow", "regex")).alias(host_rules)
+    ).withColumnRenamed("host", h)
+    d = docs.withColumns({h: host_of(F.col(url_col)), p: path_of(F.col(url_col))})
+    j = d.join(F.broadcast(by_host), h, "left")
     hits = F.filter(
-        "_rb_rules",
-        lambda r: F.regexp_like(F.col("_rb_p"), r.getField("regex")),
+        host_rules,
+        lambda r: F.regexp_like(F.col(p), r.getField("regex")),
     )
     # fold to the winning rule: score = 2*plen + allow — longest wins,
     # allow wins the tie; the (-1, TRUE) start is also the
@@ -220,5 +218,5 @@ def flag_robots_disallowed(
     # a NULL URL has no match target: surface NULL, not the
     # default-allow the fold would fall through to (ADVICE_r13 — an
     # unkeyed row must not silently pass the compliance filter)
-    verdict = F.when(F.col("_rb_p").isNotNull(), best.getField("allow"))
+    verdict = F.when(F.col(p).isNotNull(), best.getField("allow"))
     return j.withColumn(out_col, verdict).select(*docs.columns, out_col)

@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import working_names
 from terra_bonobo_nodes_spark.llm.text import nonempty_trimmed_lines, tokens
 
 # name -> portable pattern. Order matters for redaction: emails first
@@ -406,29 +407,26 @@ def line_dedup(
     (uniform by construction).
     """
     lines_arr = nonempty_trimmed_lines(F.coalesce(F.col(text_col), F.lit("")))
-    ex = df.select(F.col(id_col), F.posexplode(lines_arr).alias("_pos", "_line"))
-    winners = ex.groupBy("_line").agg(
-        F.min(F.struct(id_col, "_pos")).alias("_w")
-    )
-    kept = ex.join(winners, "_line").where(
-        F.struct(id_col, "_pos") == F.col("_w")
-    )
+    pos, line, w, txt, k, nl = working_names(df, "_pos", "_line", "_w", "_txt", "_k", "_n_lines")
+    ex = df.select(F.col(id_col), F.posexplode(lines_arr).alias(pos, line))
+    winners = ex.groupBy(line).agg(F.min(F.struct(id_col, pos)).alias(w))
+    kept = ex.join(winners, line).where(F.struct(id_col, pos) == F.col(w))
     reassembled = kept.groupBy(id_col).agg(
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_line"))),
-                lambda s: s["_line"],
+                F.array_sort(F.collect_list(F.struct(pos, line))),
+                lambda s: s[line],
             ),
             "\n",
-        ).alias("_txt"),
-        F.count(F.lit(1)).alias("_k"),
+        ).alias(txt),
+        F.count(F.lit(1)).alias(k),
     )
-    enriched = df.withColumn("_n_lines", F.size(lines_arr).cast("long"))
+    enriched = df.withColumn(nl, F.size(lines_arr).cast("long"))
     return enriched.join(reassembled, id_col, "left").select(
         *[enriched[c] for c in df.columns],
-        F.coalesce(F.col("_txt"), F.lit("")).alias(f"{prefix}text"),
-        F.col("_n_lines").alias(f"{prefix}n_lines"),
-        F.coalesce(F.col("_k"), F.lit(0)).cast("long").alias(f"{prefix}n_lines_kept"),
+        F.coalesce(F.col(txt), F.lit("")).alias(f"{prefix}text"),
+        F.col(nl).alias(f"{prefix}n_lines"),
+        F.coalesce(F.col(k), F.lit(0)).cast("long").alias(f"{prefix}n_lines_kept"),
     )
 
 

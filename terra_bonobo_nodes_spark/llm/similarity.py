@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import top_per_group
+
 _HYPERPLANE_SEED = "tbns-hyperplane-v1"
 
 
@@ -227,10 +229,8 @@ def brute_force_topk(
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", "rank")
+    return top_per_group(scored, w, k, "rank").select(
+        query_id_col, "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -452,10 +452,8 @@ def ivf_topk(
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", "rank")
+    return top_per_group(scored, w, k, "rank").select(
+        query_id_col, "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -517,10 +515,8 @@ def lsh_topk(
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", "rank")
+    return top_per_group(scored, w, k, "rank").select(
+        query_id_col, "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -652,11 +648,7 @@ def quantized_rerank_topk(
     wc = Window.partitionBy(query_id_col).orderBy(
         F.col("coarse_score").desc(), F.col("neighbor_id").asc()
     )
-    cand = (
-        coarse.withColumn("_crank", F.row_number().over(wc))
-        .where(F.col("_crank") <= coarse_k)
-        .drop("_crank")
-    )
+    cand = top_per_group(coarse, wc, coarse_k)
 
     # stage 2: exact re-rank of the survivors only
     nvec = corpus.select(
@@ -673,9 +665,6 @@ def quantized_rerank_topk(
     wr = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
-    return (
-        joined.withColumn("cos_sim", cos)
-        .withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "coarse_score", "cos_sim", "rank")
+    return top_per_group(joined.withColumn("cos_sim", cos), wr, k, "rank").select(
+        query_id_col, "neighbor_id", "coarse_score", "cos_sim", "rank"
     )

@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import top_per_group
+
 WORD_RE = "[a-z0-9]+"
 PUNCT_RE = r"[.,;:!?'\"()\[\]{}-]"
 
@@ -555,12 +557,8 @@ def tfidf_topk_terms(
         .withColumn("score", F.col("tf") * idf_col)
     )
     w = Window.partitionBy("_doc").orderBy(F.col("score").desc(), F.col("term").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("_doc").alias(id_col), "term", "tf", "dfc", "score", "rank"
-        )
+    return top_per_group(scored, w, k, "rank").select(
+        F.col("_doc").alias(id_col), "term", "tf", "dfc", "score", "rank"
     )
 
 

@@ -54,6 +54,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import working_names
+
 # Param names are matched case-sensitively against the lowercase
 # conventional spellings (tracking decorators are machine-emitted and
 # lowercase in the wild; a cased variant is left alone rather than
@@ -229,11 +231,11 @@ def flag_blocked_hosts(
         .join(bl, "_bl_sfx", "left_semi")
         .select(id_col)
         .distinct()
-        .withColumn("_blocked", F.lit(True))
     )
-    return df.join(hits, id_col, "left").withColumn(
-        out, F.coalesce(F.col("_blocked"), F.lit(False))
-    ).drop("_blocked")
+    blocked = working_names(df, "_blocked", outputs=[out])
+    return df.join(hits.withColumn(blocked, F.lit(True)), id_col, "left").withColumn(
+        out, F.coalesce(F.col(blocked), F.lit(False))
+    ).drop(blocked)
 
 
 def filter_blocked_hosts(
@@ -247,16 +249,17 @@ def filter_blocked_hosts(
     """Rows whose host matches no blocklist domain (suffix semantics,
     see :func:`flag_blocked_hosts`) — the crawl-pipeline filtering
     form, as a left-anti join on the blocked id set."""
+    hb = working_names(df, "_hb")
     flagged = flag_blocked_hosts(
         df,
         blocklist,
         url_col=url_col,
         id_col=id_col,
         domain_col=domain_col,
-        out="_hb",
+        out=hb,
         hint_broadcast=hint_broadcast,
     )
-    return flagged.filter(~F.col("_hb")).drop("_hb")
+    return flagged.filter(~F.col(hb)).drop(hb)
 
 
 def url_dedup_groups(

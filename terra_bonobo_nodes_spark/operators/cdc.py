@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import top_per_group
+
 
 def collapse_changes(
     changes: DataFrame,
@@ -37,11 +39,7 @@ def collapse_changes(
     w = Window.partitionBy(*key_cols).orderBy(
         F.col(seq_col).desc(), F.col(op_col).desc()
     )
-    return (
-        changes.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return top_per_group(changes, w, 1)
 
 
 def apply_changes(

@@ -13,6 +13,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import top_per_group, working_names
+
 
 def attribute_from_sql(
     parent: DataFrame,
@@ -100,9 +102,7 @@ def knn_join(
     if tie_breaker:
         order.append(F.col(tie_breaker).asc())
     w = Window.partitionBy(F.col(left_id)).orderBy(*order)
-    return joined.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
-    )
+    return top_per_group(joined, w, k, rank_col)
 
 
 def grid_knn_join(
@@ -135,33 +135,35 @@ def grid_knn_join(
     rx, ry = right_xy
     reach = math.ceil(max_distance / c)
     offsets = F.array(*[F.lit(i) for i in range(-reach, reach + 1)])
-    lcells = (
-        left.withColumn("_cx0", F.floor(F.col(lx) / c).cast("long"))
-        .withColumn("_cy0", F.floor(F.col(ly) / c).cast("long"))
-        .withColumn("_dx", F.explode(offsets))
-        .withColumn("_dy", F.explode(offsets))
-        .withColumn("_cx", F.col("_cx0") + F.col("_dx"))
-        .withColumn("_cy", F.col("_cy0") + F.col("_dy"))
-        .drop("_cx0", "_cy0", "_dx", "_dy")
+    cx0, cy0, ox, oy, cx, cy = working_names(
+        [left, right], "_cx0", "_cy0", "_dx", "_dy", "_cx", "_cy",
+        outputs=[distance_col, rank_col],
     )
-    rcells = right.withColumn("_cx", F.floor(F.col(rx) / c).cast("long")).withColumn(
-        "_cy", F.floor(F.col(ry) / c).cast("long")
+    lcells = (
+        left.withColumn(cx0, F.floor(F.col(lx) / c).cast("long"))
+        .withColumn(cy0, F.floor(F.col(ly) / c).cast("long"))
+        .withColumn(ox, F.explode(offsets))
+        .withColumn(oy, F.explode(offsets))
+        .withColumn(cx, F.col(cx0) + F.col(ox))
+        .withColumn(cy, F.col(cy0) + F.col(oy))
+        .drop(cx0, cy0, ox, oy)
+    )
+    rcells = right.withColumn(cx, F.floor(F.col(rx) / c).cast("long")).withColumn(
+        cy, F.floor(F.col(ry) / c).cast("long")
     )
     dx = F.col(lx) - F.col(rx)
     dy = F.col(ly) - F.col(ry)
     # explicit products (not pow): IEEE-deterministic and identical to
     # the oracle's sqrt(dx*dx + dy*dy) expression shape
-    joined = lcells.join(rcells, on=["_cx", "_cy"], how="inner").withColumn(
+    joined = lcells.join(rcells, on=[cx, cy], how="inner").withColumn(
         distance_col, F.sqrt(dx * dx + dy * dy)
     )
-    joined = joined.filter(F.col(distance_col) < F.lit(max_distance)).drop("_cx", "_cy")
+    joined = joined.filter(F.col(distance_col) < F.lit(max_distance)).drop(cx, cy)
     order = [F.col(distance_col).asc()]
     if tie_breaker:
         order.append(F.col(tie_breaker).asc())
     w = Window.partitionBy(F.col(left_id)).orderBy(*order)
-    return joined.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
-    )
+    return top_per_group(joined, w, k, rank_col)
 
 
 def salted_join(
@@ -187,11 +189,12 @@ def salted_join(
     would also do) so it's uniform regardless of key distribution.
     """
     salt = (F.abs(F.xxhash64(*[F.col(c) for c in left.columns])) % salt_buckets)
-    l_salted = left.withColumn("_salt", salt.cast("int"))
+    s = working_names([left, right], "_salt")
+    l_salted = left.withColumn(s, salt.cast("int"))
     r_salted = right.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
+        s, F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
     )
-    return l_salted.join(r_salted, [key, "_salt"], how).drop("_salt")
+    return l_salted.join(r_salted, [key, s], how).drop(s)
 
 
 def asof_join(
@@ -236,55 +239,53 @@ def asof_join(
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
     rts = right_ts or left_ts
     payload = [c for c in (right_cols or right.columns) if c not in (on, rts)]
+    k, t, side, r, m = working_names(left, "_k", "_t", "_side", "_r", "_m")
+    ts = working_names(payload, "_ts")
     r2 = right.select(
-        F.col(on).alias("_k"),
-        F.col(rts).alias("_t"),
-        F.lit(0).alias("_side"),
-        F.struct(F.col(rts).alias("_ts"), *[F.col(c) for c in payload]).alias("_r"),
+        F.col(on).alias(k),
+        F.col(rts).alias(t),
+        F.lit(0).alias(side),
+        F.struct(F.col(rts).alias(ts), *[F.col(c) for c in payload]).alias(r),
     )
-    rtype = r2.schema["_r"].dataType
+    rtype = r2.schema[r].dataType
     l3 = left.select(
         *left.columns,
-        F.col(on).alias("_k"),
-        F.col(left_ts).alias("_t"),
-        F.lit(1).alias("_side"),
-        F.lit(None).cast(rtype).alias("_r"),
+        F.col(on).alias(k),
+        F.col(left_ts).alias(t),
+        F.lit(1).alias(side),
+        F.lit(None).cast(rtype).alias(r),
     )
     r3 = r2.select(
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left.columns],
-        "_k",
-        "_t",
-        "_side",
-        "_r",
+        k,
+        t,
+        side,
+        r,
     )
     u = l3.unionByName(r3)
 
     # right rows sort before left rows at equal ts (side 0 < 1 asc) so
     # the running last() is inclusive in both directions. The trailing
-    # _r key breaks ties among right rows sharing (key, ts)
+    # struct key breaks ties among right rows sharing (key, ts)
     # deterministically (struct ordering = lexicographic over fields;
     # left rows are all NULL there, so their relative order is moot) —
     # without it last() would pick whichever duplicate the shuffle
     # happened to deliver last. Requires orderable payload types (no
     # maps), same constraint Spark puts on any sort key.
-    ts_order = F.col("_t").asc() if direction == "backward" else F.col("_t").desc()
+    ts_order = F.col(t).asc() if direction == "backward" else F.col(t).desc()
     w = (
-        Window.partitionBy("_k")
-        .orderBy(ts_order, F.col("_side").asc(), F.col("_r").asc())
+        Window.partitionBy(k)
+        .orderBy(ts_order, F.col(side).asc(), F.col(r).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    matched = F.last("_r", ignorenulls=True).over(w)
-    out = u.withColumn("_m", matched).where(F.col("_side") == 1)
+    matched = F.last(r, ignorenulls=True).over(w)
+    out = u.withColumn(m, matched).where(F.col(side) == 1)
     if tolerance_seconds is not None:
-        gap = F.abs(
-            F.col("_t").cast("double") - F.col("_m._ts").cast("double")
-        )
-        out = out.withColumn(
-            "_m", F.when(gap <= F.lit(float(tolerance_seconds)), F.col("_m"))
-        )
+        gap = F.abs(F.col(t).cast("double") - F.col(m)[ts].cast("double"))
+        out = out.withColumn(m, F.when(gap <= F.lit(float(tolerance_seconds)), F.col(m)))
     sel = [F.col(c) for c in left.columns]
-    sel.append(F.col("_m._ts").alias(f"{rts}{suffix}"))
-    sel.extend(F.col(f"_m.{c}").alias(f"{c}{suffix}") for c in payload)
+    sel.append(F.col(m)[ts].alias(f"{rts}{suffix}"))
+    sel.extend(F.col(m)[c].alias(f"{c}{suffix}") for c in payload)
     return out.select(*sel)
 
 
@@ -329,18 +330,15 @@ def interval_point_join(
         f"interval spans more than {max_buckets_per_interval} buckets "
         f"of {b:.0f}s; raise bucket_seconds or split the interval",
     )
-    ib = intervals.withColumn(
-        "_bucket", F.explode(F.when(guard.isNull(), F.sequence(lo, hi)))
-    )
-    pb = points.withColumn(
-        "_bucket", F.floor(F.col(point_ts).cast("double") / b).cast("long")
-    )
-    join_keys = ["_bucket"] if on is None else ["_bucket", on]
+    bk = working_names([intervals, points], "_bucket")
+    ib = intervals.withColumn(bk, F.explode(F.when(guard.isNull(), F.sequence(lo, hi))))
+    pb = points.withColumn(bk, F.floor(F.col(point_ts).cast("double") / b).cast("long"))
+    join_keys = [bk] if on is None else [bk, on]
     return (
         ib.join(pb, join_keys, "inner")
         .where(
             (F.col(point_ts) >= F.col(start_col))
             & (F.col(point_ts) <= F.col(end_col))
         )
-        .drop("_bucket")
+        .drop(bk)
     )

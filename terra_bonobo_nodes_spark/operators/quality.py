@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import working_names
+
 
 def check_constraints(
     df: DataFrame,
@@ -311,16 +313,17 @@ def robust_outliers(
         )
         return ranked.where(
             F.col("_rn") == F.expr("(_n + 1) div 2")
-        ).select(g.alias("_g"), F.col(col).alias(out))
+        ).select(g.alias(gk), F.col(col).alias(out))
 
     base = df.where(v.isNotNull())
+    gk = working_names(df, "_g", outputs=["med", "mad", "is_outlier"])
     med = _disc_median(base, value_col, "med")
-    with_med = base.join(med, base[group_col] == med["_g"]).drop("_g")
+    with_med = base.join(med, base[group_col] == med[gk]).drop(gk)
     dev = with_med.select(
         group_col, F.abs(v - F.col("med")).alias("_absdev")
     )
     mad = _disc_median(dev, "_absdev", "mad")
-    out = with_med.join(mad, with_med[group_col] == mad["_g"]).drop("_g")
+    out = with_med.join(mad, with_med[group_col] == mad[gk]).drop(gk)
     return out.withColumn(
         "is_outlier",
         F.lit(int(k_den)) * F.abs(v - F.col("med"))

@@ -12,9 +12,12 @@ uses a GiST index scan before exact DE-9IM tests.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import working_names
 from terra_bonobo_nodes_spark.geo import kernels as K
 
 IDENTIFIER = "identifier"
@@ -113,13 +116,14 @@ def subdivide_geom(
     is make_valid'd first (the reference's ``ST_Buffer(geom, 0)``,
     ``terra.py:95-97``)."""
     parts = K.st_subdivide(K.st_makevalid(F.col(geom_col)), max_vertices)
+    pos = working_names(df, "_pos")
     exploded = df.select(
         *[c for c in df.columns if c != geom_col],
-        F.posexplode(parts).alias("_pos", geom_col),
+        F.posexplode(parts).alias(pos, geom_col),
     )
     return exploded.withColumn(
-        identifier_col, F.concat_ws("-", F.col(identifier_col), F.col("_pos"))
-    ).drop("_pos")
+        identifier_col, F.concat_ws("-", F.col(identifier_col), F.col(pos))
+    ).drop(pos)
 
 
 # --- A2/A4: geometric aggregation -------------------------------------------
@@ -290,38 +294,39 @@ def _kdb_candidates(
     # empty record side: x_bounds stays [], _strip_index degenerates to
     # a single leaf and the join naturally produces zero candidates
     x_bounds = list(xb_row["xb"] or [])
+    sx, sy = working_names([rec, lay], "_sx", "_sy")
     yb_rows = (
-        rec_nn.withColumn("_sx", _strip_index(F.lit(x_bounds).cast("array<double>"), cx))
-        .groupBy("_sx")
+        rec_nn.withColumn(sx, _strip_index(F.lit(x_bounds).cast("array<double>"), cx))
+        .groupBy(sx)
         .agg(F.percentile_approx(cy, F.lit(yq).cast("array<double>")).alias("yb"))
         .collect()
     )
     y_bounds = [[] for _ in range(px)]
     for r in yb_rows:
-        y_bounds[int(r["_sx"])] = list(r["yb"] or [])
+        y_bounds[int(r[sx])] = list(r["yb"] or [])
     xb_lit = F.array(*[F.lit(float(v)) for v in x_bounds])
     yb_lit = F.array(
         *[F.array(*[F.lit(float(v)) for v in yb]) for yb in y_bounds]
     )
 
     def tiled(df: DataFrame, bbox: Column) -> DataFrame:
-        sx = F.explode(
+        tx = F.explode(
             F.sequence(
                 _strip_index(xb_lit, F.element_at(bbox, 1)),
                 _strip_index(xb_lit, F.element_at(bbox, 3)),
             )
         )
-        out = df.filter(bbox.isNotNull()).withColumn("_sx", sx)
-        yb = F.element_at(yb_lit, F.col("_sx") + 1)
-        sy = F.explode(
+        out = df.filter(bbox.isNotNull()).withColumn(sx, tx)
+        yb = F.element_at(yb_lit, F.col(sx) + 1)
+        ty = F.explode(
             F.sequence(
                 _strip_index(yb, F.element_at(bbox, 2)),
                 _strip_index(yb, F.element_at(bbox, 4)),
             )
         )
-        return out.withColumn("_sy", sy)
+        return out.withColumn(sy, ty)
 
-    joined = tiled(rec, rec_bbox).join(tiled(lay, lay_bbox), on=["_sx", "_sy"])
+    joined = tiled(rec, rec_bbox).join(tiled(lay, lay_bbox), on=[sx, sy])
     ix = _strip_index(
         xb_lit, F.greatest(F.element_at(rec_bbox, 1), F.element_at(lay_bbox, 1))
     )
@@ -331,20 +336,21 @@ def _kdb_candidates(
     )
     return (
         joined.filter(_bbox_overlap(rec_bbox, lay_bbox))
-        .filter((F.col("_sx") == ix) & (F.col("_sy") == iy))
-        .drop("_sx", "_sy")
+        .filter((F.col(sx) == ix) & (F.col(sy) == iy))
+        .drop(sx, sy)
     )
 
 
 def _candidates(
     rec: DataFrame,
     lay: DataFrame,
-    rec_bbox: Column | str,
-    lay_bbox: Column | str,
+    rec_bbox: str,
+    lay_bbox: str,
     strategy: str,
     cell: float | None,
 ) -> DataFrame:
-    """Candidate pairs whose envelopes overlap, by one of two plans:
+    """Candidate pairs whose envelopes overlap, by one of three plans
+    (the bbox args are SQL references such as ``"_rx.bbox"``):
 
     - ``broadcast``: broadcast the (dimension-sized) layer, cull with
       the bbox predicate inside whole-stage codegen. The default, and
@@ -360,69 +366,71 @@ def _candidates(
       order of a typical feature envelope: too small explodes
       replication, too large degrades to few fat partitions (AQE evens
       out the tail).
+    - ``kdb``: :func:`_kdb_candidates`, the skew-adaptive big-big path.
     """
     if strategy == "broadcast":
         return rec.join(F.broadcast(lay), _bbox_overlap(rec_bbox, lay_bbox))
     if strategy == "kdb":
-        # the kdb path keeps its Column contract (tests drive it
-        # directly); F.expr over a "_rx.bbox"-style reference is the
-        # same attribute access F.col builds
-        rb = F.expr(rec_bbox) if isinstance(rec_bbox, str) else rec_bbox
-        lb = F.expr(lay_bbox) if isinstance(lay_bbox, str) else lay_bbox
-        return _kdb_candidates(rec, lay, rb, lb)
+        return _kdb_candidates(rec, lay, F.expr(rec_bbox), F.expr(lay_bbox))
     if strategy != "grid":
         raise ValueError(f"unknown spatial join strategy {strategy!r}")
     if cell is None or cell <= 0:
         raise ValueError("grid strategy requires a positive cell size")
-    if not (isinstance(rec_bbox, str) and isinstance(lay_bbox, str)):
-        # Column args keep the grid contract too (ADVICE r17: the r17
-        # SQL-text fast path silently narrowed a previously
-        # Column-typed parameter while broadcast/kdb still accepted
-        # Columns). Route through the same SQL text by aliasing the
-        # Column to a working bbox column on each side — identical
-        # grid algebra, one extra pruned projection.
-        rec2 = rec.withColumn(
-            "_cand_rb",
-            F.expr(rec_bbox) if isinstance(rec_bbox, str) else rec_bbox,
-        )
-        lay2 = lay.withColumn(
-            "_cand_lb",
-            F.expr(lay_bbox) if isinstance(lay_bbox, str) else lay_bbox,
-        )
-        out = _candidates(rec2, lay2, "_cand_rb", "_cand_lb", strategy, cell)
-        return out.drop("_cand_rb", "_cand_lb")
     c = float(cell)
+    gx, gy = working_names([rec, lay], "_gx", "_gy")
 
     # parsed SQL text throughout (the _bbox_overlap rationale): the
     # grid expressions below are built once per operator call and the
     # op-by-op form cost ~0.2s of py4j latency each
     def tiled(df: DataFrame, bbox: str) -> DataFrame:
-        gx = (
+        tx = (
             f"explode(sequence(cast(floor(element_at({bbox}, 1) / {c!r}D) as long), "
             f"cast(floor(element_at({bbox}, 3) / {c!r}D) as long)))"
         )
-        gy = (
+        ty = (
             f"explode(sequence(cast(floor(element_at({bbox}, 2) / {c!r}D) as long), "
             f"cast(floor(element_at({bbox}, 4) / {c!r}D) as long)))"
         )
         return (
             df.filter(F.expr(f"{bbox} IS NOT NULL"))
-            .withColumn("_gx", F.expr(gx))
-            .withColumn("_gy", F.expr(gy))
+            .withColumn(gx, F.expr(tx))
+            .withColumn(gy, F.expr(ty))
         )
 
-    joined = tiled(rec, rec_bbox).join(tiled(lay, lay_bbox), on=["_gx", "_gy"])
+    joined = tiled(rec, rec_bbox).join(tiled(lay, lay_bbox), on=[gx, gy])
     rep = F.expr(
-        f"_gx = cast(floor(greatest(element_at({rec_bbox}, 1), "
+        f"{gx} = cast(floor(greatest(element_at({rec_bbox}, 1), "
         f"element_at({lay_bbox}, 1)) / {c!r}D) as long) AND "
-        f"_gy = cast(floor(greatest(element_at({rec_bbox}, 2), "
+        f"{gy} = cast(floor(greatest(element_at({rec_bbox}, 2), "
         f"element_at({lay_bbox}, 2)) / {c!r}D) as long)"
     )
     return (
         joined.filter(_bbox_overlap(rec_bbox, lay_bbox))
         .filter(rep)
-        .drop("_gx", "_gy")
+        .drop(gx, gy)
     )
+
+
+def _join_sides(
+    records: DataFrame, layer: DataFrame, id_col: str, record_geom: str, layer_geom: str,
+    record_prep: str | None, layer_prep: str | None,
+    record_kernel: Callable[[Column], Column], layer_kernel: Callable[[Column], Column],
+    keep_record_geom: bool, persist: bool,
+) -> tuple[DataFrame, DataFrame, str, str]:
+    """Both join sides narrowed to key/geometry plus one prep struct,
+    as ``(rec, lay, rx, lx)`` with ``rx``/``lx`` naming the structs: the
+    caller's ``record_prep``/``layer_prep`` column when given, else the
+    side's kernel over its geometry; optionally persisted (scoped, see
+    :func:`_scoped_persist`) for plans that scan a side twice."""
+    rx, lx = working_names([id_col, record_geom, layer_geom], "_rx", "_lx")
+    rkeep = [id_col, record_geom] if keep_record_geom else [id_col]
+    rprep = F.col(record_prep) if record_prep else record_kernel(F.col(record_geom))
+    lprep = F.col(layer_prep) if layer_prep else layer_kernel(F.col(layer_geom))
+    rec = records.select(*rkeep, rprep.alias(rx))
+    lay = layer.select(layer_geom, lprep.alias(lx))
+    if persist:
+        rec, lay = _scoped_persist(rec), _scoped_persist(lay)
+    return rec, lay, rx, lx
 
 
 def boolean_intersect(
@@ -434,6 +442,8 @@ def boolean_intersect(
     id_col: str = IDENTIFIER,
     strategy: str = "broadcast",
     cell: float | None = None,
+    record_prep: str | None = None,
+    layer_prep: str | None = None,
 ) -> DataFrame:
     """``BooleanIntersect`` (``terra.py:214-242``): existential spatial
     semi-join -> boolean flag. Kernel errors yield False, matching the
@@ -444,41 +454,24 @@ def boolean_intersect(
     bboxes, cull pairs with the JVM bbox predicate, then split: for
     boxy×boxy pairs (points, grid tiles — see ``st_bbox_boxy``) the
     bbox overlap IS the exact answer, evaluated wholly in whole-stage
-    codegen; only curvy pairs reach the Python intersects kernel. The
-    record side is persisted because both branches scan it (scoped: the
-    cache is released on the next spatial-join call or via
-    ``release_spatial_caches``). Rows with no layer match keep
-    flag=False via left join + coalesce. ``strategy="grid"`` (with a
-    ``cell`` size) switches to the big-big cell-partitioned join — use
-    it when the layer is too large to broadcast."""
-    # r18: callers that already carry join-prep metadata (an `_rx`
-    # struct with bbox/boxy fields — e.g. built by the fused
-    # st_poly_prep kernel, or JVM-side for point columns whose bbox is
-    # closed-form) skip the per-row bbox kernel here entirely
-    if "_rx" in records.columns:
-        rec = _scoped_persist(records.select(id_col, record_geom, "_rx"))
-    else:
-        rec = _scoped_persist(
-            records.select(id_col, record_geom).withColumn(
-                "_rx", K.st_bbox_boxy(F.col(record_geom))
-            )
-        )
-    # the LAYER side gets the same scoped cache as the record side
-    # (r17): both the candidate join's branches re-scan it, and without
-    # the persist the layer's geometry build + bbox kernel re-run once
-    # per branch — same bounded-narrow-frame rationale as rec
-    if "_lx" in layer.columns:
-        lay = _scoped_persist(layer.select(layer_geom, "_lx"))
-    else:
-        lay = _scoped_persist(
-            layer.select(layer_geom).withColumn(
-                "_lx", K.st_bbox_boxy(F.col(layer_geom))
-            )
-        )
-    cand = _candidates(
-        rec, lay, "_rx.bbox", "_lx.bbox", strategy, cell
+    codegen; only curvy pairs reach the Python intersects kernel. Both
+    narrowed sides are persisted because both branches scan them
+    (scoped: at most ``_MAX_LIVE_CACHES`` join sides stay cached, the
+    oldest released first, or all via ``release_spatial_caches``).
+    Rows with no layer match keep flag=False via left join + coalesce.
+    ``strategy="grid"`` (with a ``cell`` size) switches to the big-big
+    cell-partitioned join — use it when the layer is too large to
+    broadcast.
+
+    ``record_prep``/``layer_prep`` name a column of ``records``/``layer``
+    that already holds the side's ``st_bbox_boxy`` struct (``bbox``,
+    ``boxy``); the per-row bbox kernel is then skipped for that side."""
+    rec, lay, rx, lx = _join_sides(
+        records, layer, id_col, record_geom, layer_geom, record_prep, layer_prep,
+        K.st_bbox_boxy, K.st_bbox_boxy, keep_record_geom=True, persist=True,
     )
-    both_boxy = F.col("_rx.boxy") & F.col("_lx.boxy")
+    cand = _candidates(rec, lay, f"{rx}.bbox", f"{lx}.bbox", strategy, cell)
+    both_boxy = F.col(f"{rx}.boxy") & F.col(f"{lx}.boxy")
     fast = cand.filter(both_boxy).select(id_col)
     # NULL-mask the kernel args on the boxy pairs: Catalyst extracts the
     # pandas UDF out of the Filter into an ArrowEvalPython node that
@@ -516,6 +509,8 @@ def intersection_percent_by_area(
     strategy: str = "broadcast",
     cell: float | None = None,
     rect_fast: bool = True,
+    record_prep: str | None = None,
+    layer_prep: str | None = None,
 ) -> DataFrame:
     """``IntersectionPercentByArea`` (``terra.py:245-279``): area of the
     record's geometry covered by the layer, as a ratio; 0.0 when no
@@ -531,81 +526,59 @@ def intersection_percent_by_area(
     feature routes every record through the geometry-kernel path
     (coarse routing, but then the check costs nothing and the two
     union paths never mix for one record). ``rect_fast=False`` forces
-    the kernel path everywhere (parity testing)."""
+    the kernel path everywhere (parity testing).
+
+    ``record_prep`` names a column of ``records`` holding the
+    ``st_prepare`` struct (``geom``, ``bbox``, ``boxy``, ``area``;
+    the fused ``st_poly_prep`` kernel emits it), ``layer_prep`` one of
+    ``layer`` holding the ``st_bbox_boxy`` struct; the side's prep
+    kernel is then skipped."""
     # ONE fused kernel pass prepares the record side: make_valid
     # (idempotent, so the reference's per-pair repair collapses to
-    # per-row), bbox, boxy flag, and the area denominator; persisted
-    # (scoped — released on the next spatial-join call) because the
-    # fast and slow branches both scan it
-    # r18: a caller-provided `_rx` struct (st_prepare's geom/bbox/boxy/
-    # area contract — the fused st_poly_prep kernel emits it in one
-    # vectorized crossing) skips the per-row prepare kernel here
-    if "_rx" in records.columns:
-        rec = _scoped_persist(records.select(id_col, "_rx"))
-    else:
-        rec = _scoped_persist(
-            records.select(id_col, K.st_prepare(F.col(record_geom)).alias("_rx"))
-        )
-    # layer side cached too (r17): the dissolve path reads lay THREE
-    # times (routing scalar + fast/slow candidate joins) and the
-    # pairwise path twice — each read otherwise re-runs the layer's
-    # geometry build + bbox kernel (narrow frame, same FIFO bound)
-    if "_lx" in layer.columns:
-        lay = _scoped_persist(layer.select(layer_geom, "_lx"))
-    else:
-        lay = _scoped_persist(
-            layer.select(layer_geom).withColumn(
-                "_lx", K.st_bbox_boxy(F.col(layer_geom))
-            )
-        )
+    # per-row), bbox, boxy flag, and the area denominator. Both sides
+    # are persisted (scoped, FIFO-bounded): the fast and slow branches
+    # both scan rec, and the dissolve path reads lay three times
+    # (routing scalar + fast/slow candidate joins), the pairwise path
+    # twice — each read otherwise re-runs the side's geometry build
+    rec, lay, rx, lx = _join_sides(
+        records, layer, id_col, record_geom, layer_geom, record_prep, layer_prep,
+        K.st_prepare, K.st_bbox_boxy, keep_record_geom=False, persist=True,
+    )
+    zone_area, ra = working_names(records, "_zone_area", "_ra", outputs=[out])
     if dissolve:
         # Routing scalar: 1 iff EVERY layer feature is boxy (its own
         # bbox rect) — a lazily-computed 1-row broadcast, the
         # corpus-stats-scalar pattern. The record SIDE splits before
-        # pair generation: per-record _rx.boxy AND the scalar pick the
+        # pair generation: per-record boxy flag AND the scalar pick the
         # path, so no id ever lands in both unions — and the split
         # must happen pre-join because a post-join filter would still
         # feed every pair through the extracted st_intersects
         # ArrowEvalPython node (UDFs inside a Filter evaluate on all
         # input rows; measured 16s on 550k pruned-to-zero pairs).
-        lab = lay.agg(F.min(F.col("_lx.boxy").cast("int")).alias("_lab"))
+        lab = working_names([id_col, rx], "_lab")
+        lay_boxy = lay.agg(F.min(F.col(f"{lx}.boxy").cast("int")).alias(lab))
         fastp = (
             F.lit(rect_fast)
-            & F.col("_rx.boxy")
-            & F.coalesce(F.col("_lab") == 1, F.lit(False))
+            & F.col(f"{rx}.boxy")
+            & F.coalesce(F.col(lab) == 1, F.lit(False))
         )
-        rec_flag = rec.crossJoin(F.broadcast(lab))
-        rec_fast = rec_flag.filter(fastp).drop("_lab")
-        rec_slow = rec_flag.filter(~fastp).drop("_lab")
+        rec_flag = rec.crossJoin(F.broadcast(lay_boxy))
+        rec_fast = rec_flag.filter(fastp).drop(lab)
+        rec_slow = rec_flag.filter(~fastp).drop(lab)
         # parsed SQL text (the _bbox_overlap rationale): these four
         # corners are re-referenced by the filter and the select below,
         # and the op-by-op build cost ~0.2s per leg
-        zx0 = F.expr(
-            "greatest(element_at(_rx.bbox, 1), element_at(_lx.bbox, 1))"
-        )
-        zy0 = F.expr(
-            "greatest(element_at(_rx.bbox, 2), element_at(_lx.bbox, 2))"
-        )
-        zx1 = F.expr(
-            "least(element_at(_rx.bbox, 3), element_at(_lx.bbox, 3))"
-        )
-        zy1 = F.expr(
-            "least(element_at(_rx.bbox, 4), element_at(_lx.bbox, 4))"
-        )
+        zx0 = F.expr(f"greatest(element_at({rx}.bbox, 1), element_at({lx}.bbox, 1))")
+        zy0 = F.expr(f"greatest(element_at({rx}.bbox, 2), element_at({lx}.bbox, 2))")
+        zx1 = F.expr(f"least(element_at({rx}.bbox, 3), element_at({lx}.bbox, 3))")
+        zy1 = F.expr(f"least(element_at({rx}.bbox, 4), element_at({lx}.bbox, 4))")
+        corners = working_names([id_col], "_zx0", "_zy0", "_zx1", "_zy1")
         # boxy x all-boxy: zone rect in codegen, union area by sweep —
         # no WKB reaches Python on this path
         fast_zones = (
-            _candidates(
-                rec_fast, lay, "_rx.bbox", "_lx.bbox", strategy, cell
-            )
+            _candidates(rec_fast, lay, f"{rx}.bbox", f"{lx}.bbox", strategy, cell)
             .filter((zx1 > zx0) & (zy1 > zy0))
-            .select(
-                id_col,
-                zx0.alias("_zx0"),
-                zy0.alias("_zy0"),
-                zx1.alias("_zx1"),
-                zy1.alias("_zy1"),
-            )
+            .select(id_col, *(z.alias(n) for z, n in zip((zx0, zy0, zx1, zy1), corners)))
             .groupBy(id_col)
             # JVM collect_list + ONE scalar kernel call per Arrow batch,
             # not a GROUPED_AGG (one Python invocation PER GROUP): same
@@ -615,78 +588,66 @@ def intersection_percent_by_area(
             # ones — r17: 4.6s -> 2.6s on the dissolve-leg zones at
             # sf0.1. collect_list partially aggregates map-side, so the
             # exchange carries the same 4 doubles per pair either way.
-            .agg(
-                F.collect_list("_zx0").alias("_lx0"),
-                F.collect_list("_zy0").alias("_ly0"),
-                F.collect_list("_zx1").alias("_lx1"),
-                F.collect_list("_zy1").alias("_ly1"),
-            )
+            .agg(*(F.collect_list(n).alias(n) for n in corners))
             .select(
                 id_col,
-                K.st_rect_union_area_lists(
-                    F.col("_lx0"), F.col("_ly0"), F.col("_lx1"), F.col("_ly1")
-                ).alias("_zone_area"),
+                K.st_rect_union_area_lists(*(F.col(n) for n in corners)).alias(zone_area),
             )
         )
         # general path (a GROUPED_AGG pandas UDF can't mix with JVM
         # aggregates in one agg — the constant-per-id denominator
         # joins back from rec below)
+        zone = working_names([id_col, rx, layer_geom, lx], "_zone")
         slow_zones = (
-            _candidates(
-                rec_slow, lay, "_rx.bbox", "_lx.bbox", strategy, cell
-            )
-            .filter(K.st_intersects(F.col("_rx.geom"), F.col(layer_geom)))
-            .withColumn(
-                "_zone", K.st_intersection(F.col("_rx.geom"), F.col(layer_geom))
-            )
+            _candidates(rec_slow, lay, f"{rx}.bbox", f"{lx}.bbox", strategy, cell)
+            .filter(K.st_intersects(F.col(f"{rx}.geom"), F.col(layer_geom)))
+            .withColumn(zone, K.st_intersection(F.col(f"{rx}.geom"), F.col(layer_geom)))
             .groupBy(id_col)
-            .agg(K.st_union_area_agg(F.col("_zone")).alias("_zone_area"))
+            .agg(K.st_union_area_agg(F.col(zone)).alias(zone_area))
         )
-        zones = fast_zones.unionByName(slow_zones).join(
-            rec.select(id_col, F.col("_rx.area").alias("_ra")), on=id_col
+        per_rec = fast_zones.unionByName(slow_zones).join(
+            rec.select(id_col, F.col(f"{rx}.area").alias(ra)), on=id_col
         )
-        joined = records.join(zones, on=id_col, how="left")
-        ratio = F.coalesce(F.col("_zone_area") / F.col("_ra"), F.lit(0.0))
-        return joined.withColumn(out, ratio).drop("_zone_area", "_ra")
-    cand = _candidates(
-        rec, lay, "_rx.bbox", "_lx.bbox", strategy, cell
-    )
-    both_boxy = F.col("_rx.boxy") & F.col("_lx.boxy")
-    # boxy×boxy overlap area is closed-form over the bboxes — evaluated
-    # in whole-stage codegen, no Python; only curvy pairs hit the fused
-    # intersection-area kernel (no exact intersects prefilter there:
-    # empty intersections add 0 to the sum). One parsed expression (the
-    # _bbox_overlap rationale); w/h re-state inline exactly as the
-    # Column form duplicated their subtrees into the when().
-    _w = (
-        "(least(element_at(_rx.bbox, 3), element_at(_lx.bbox, 3)) - "
-        "greatest(element_at(_rx.bbox, 1), element_at(_lx.bbox, 1)))"
-    )
-    _h = (
-        "(least(element_at(_rx.bbox, 4), element_at(_lx.bbox, 4)) - "
-        "greatest(element_at(_rx.bbox, 2), element_at(_lx.bbox, 2)))"
-    )
-    rect_area = F.expr(
-        f"CASE WHEN {_w} > 0 AND {_h} > 0 THEN {_w} * {_h} ELSE 0.0D END"
-    )
-    fast = cand.filter(both_boxy).select(
-        id_col, rect_area.alias("_ia"), F.col("_rx.area").alias("_ra")
-    )
-    slow = cand.filter(~both_boxy).select(
-        id_col,
-        K.st_intersection_area(F.col("_rx.geom"), F.col(layer_geom)).alias("_ia"),
-        F.col("_rx.area").alias("_ra"),
-    )
-    # the area denominator rides through the aggregate (constant per
-    # id), so no extra kernel pass over the records after the join
-    per_pair = (
-        fast.unionByName(slow)
-        .groupBy(id_col)
-        .agg(F.sum("_ia").alias("_zone_area"), F.max("_ra").alias("_ra"))
-    )
-    joined = records.join(per_pair, on=id_col, how="left")
-    ratio = F.coalesce(F.col("_zone_area") / F.col("_ra"), F.lit(0.0))
-    return joined.withColumn(out, ratio).drop("_zone_area", "_ra")
+    else:
+        cand = _candidates(rec, lay, f"{rx}.bbox", f"{lx}.bbox", strategy, cell)
+        both_boxy = F.col(f"{rx}.boxy") & F.col(f"{lx}.boxy")
+        # boxy×boxy overlap area is closed-form over the bboxes —
+        # evaluated in whole-stage codegen, no Python; only curvy pairs
+        # hit the fused intersection-area kernel (no exact intersects
+        # prefilter there: empty intersections add 0 to the sum). One
+        # parsed expression (the _bbox_overlap rationale); w/h re-state
+        # inline exactly as the Column form duplicated their subtrees
+        # into the when().
+        _w = (
+            f"(least(element_at({rx}.bbox, 3), element_at({lx}.bbox, 3)) - "
+            f"greatest(element_at({rx}.bbox, 1), element_at({lx}.bbox, 1)))"
+        )
+        _h = (
+            f"(least(element_at({rx}.bbox, 4), element_at({lx}.bbox, 4)) - "
+            f"greatest(element_at({rx}.bbox, 2), element_at({lx}.bbox, 2)))"
+        )
+        rect_area = F.expr(
+            f"CASE WHEN {_w} > 0 AND {_h} > 0 THEN {_w} * {_h} ELSE 0.0D END"
+        )
+        ia = working_names([id_col], "_ia")
+        area = F.col(f"{rx}.area").alias(ra)
+        fast = cand.filter(both_boxy).select(id_col, rect_area.alias(ia), area)
+        slow = cand.filter(~both_boxy).select(
+            id_col,
+            K.st_intersection_area(F.col(f"{rx}.geom"), F.col(layer_geom)).alias(ia),
+            area,
+        )
+        # the area denominator rides through the aggregate (constant
+        # per id), so no extra kernel pass over the records after the
+        # join
+        per_rec = (
+            fast.unionByName(slow)
+            .groupBy(id_col)
+            .agg(F.sum(ia).alias(zone_area), F.max(ra).alias(ra))
+        )
+    joined = records.join(per_rec, on=id_col, how="left")
+    ratio = F.coalesce(F.col(zone_area) / F.col(ra), F.lit(0.0))
+    return joined.withColumn(out, ratio).drop(zone_area, ra)
 
 
 def intersection_geom(
@@ -699,6 +660,8 @@ def intersection_geom(
     dissolve: bool = False,
     strategy: str = "broadcast",
     cell: float | None = None,
+    record_prep: str | None = None,
+    layer_prep: str | None = None,
 ) -> DataFrame:
     """``IntersectionGeom`` (``terra.py:523-557``): clip the record's
     geometry to the layer — the unioned intersection replaces the
@@ -706,30 +669,31 @@ def intersection_geom(
     convention for empty results). The default collect aggregation is
     the reference's ``|=`` union when layer features are disjoint (grid
     tiles); pass ``dissolve=True`` for an OVERLAPPING layer so shared
-    regions are not double-counted downstream."""
+    regions are not double-counted downstream.
+
+    ``record_prep`` names a column of ``records`` holding the
+    ``st_prepare`` struct, ``layer_prep`` one of ``layer`` holding a
+    struct with a ``bbox`` field; the side's prep kernel is then
+    skipped."""
     agg = K.st_union_agg if dissolve else K.st_collect_agg
-    if "_rx" in records.columns:
-        rec = records.select(id_col, "_rx")
-    else:
-        rec = records.select(id_col, K.st_prepare(F.col(record_geom)).alias("_rx"))
-    if "_lx" in layer.columns:
-        # derive the bbox-only column JVM-side from caller-provided prep
-        lay = layer.select(layer_geom, F.col("_lx.bbox").alias("_lb"))
-    else:
-        lay = layer.select(layer_geom).withColumn(
-            "_lb", K.st_bbox(F.col(layer_geom))
-        )
-    zones = (
-        _candidates(rec, lay, "_rx.bbox", "_lb", strategy, cell)
-        .filter(K.st_intersects(F.col("_rx.geom"), F.col(layer_geom)))
-        .withColumn("_zone", K.st_intersection(F.col("_rx.geom"), F.col(layer_geom)))
-        .groupBy(id_col)
-        .agg(agg(F.col("_zone")).alias("_zone"))
-    )
     dest = geom_dest or record_geom
+    rec, lay, rx, lx = _join_sides(
+        records, layer, id_col, record_geom, layer_geom, record_prep, layer_prep,
+        K.st_prepare, K.st_bbox, keep_record_geom=False, persist=False,
+    )
+    if layer_prep:
+        lay = lay.withColumn(lx, F.col(f"{lx}.bbox"))
+    zone = working_names(records, "_zone", outputs=[dest])
+    zones = (
+        _candidates(rec, lay, f"{rx}.bbox", lx, strategy, cell)
+        .filter(K.st_intersects(F.col(f"{rx}.geom"), F.col(layer_geom)))
+        .withColumn(zone, K.st_intersection(F.col(f"{rx}.geom"), F.col(layer_geom)))
+        .groupBy(id_col)
+        .agg(agg(F.col(zone)).alias(zone))
+    )
     return records.join(zones, on=id_col, how="left").withColumn(
-        dest, F.col("_zone")
-    ).drop("_zone")
+        dest, F.col(zone)
+    ).drop(zone)
 
 
 # --- T1: geometric running difference ---------------------------------------

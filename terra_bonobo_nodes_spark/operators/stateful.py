@@ -13,6 +13,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.columns import top_per_group
+
 
 def running_lag_diff(
     df: DataFrame,
@@ -48,12 +50,7 @@ def upsert_last_writer_wins(
 
     Scale: one hash partition on the key; AQE handles skewed keys.
     """
-    w = Window.partitionBy(*key).orderBy(*order_by)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return top_per_group(df, Window.partitionBy(*key).orderBy(*order_by), 1)
 
 
 def clean_older_than(

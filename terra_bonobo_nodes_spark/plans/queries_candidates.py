@@ -2171,15 +2171,16 @@ def j2_overlay_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("intersection_percent", 6).alias("intersection_percent"),
         )
 
+    prep = {"record_prep": "prep", "layer_prep": "prep"}
     pairwise = leg(
         intersection_percent_by_area(
-            _customer_rects(spark, sf_dir), _tile_layer(spark)
+            _customer_rects(spark, sf_dir), _tile_layer(spark), **prep
         ),
         "pairwise",
     )
     concave = leg(
         intersection_percent_by_area(
-            _customer_ells(spark, sf_dir), _ell_tile_layer(spark)
+            _customer_ells(spark, sf_dir), _ell_tile_layer(spark), **prep
         ),
         "concave",
     )
@@ -2201,7 +2202,7 @@ def j2_overlay_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     records = cust.select(
         F.col("c_custkey").alias("identifier"),
         rpp["geom"].alias("geom"),
-        rpp.alias("_rx"),
+        rpp.alias("prep"),
     )
     t = spark.range(0, 40, 1, 1)  # one partition — see _tile_layer
     x0 = (F.col("id") % 5).cast("double")
@@ -2210,9 +2211,10 @@ def j2_overlay_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(x0, x0 + 4, x0 + 4, x0),
         F.array(y0, y0, y0 + 4, y0 + 4),
     )
-    tiles = t.select(tpp["geom"].alias("layer_geom"), tpp.alias("_lx"))
+    tiles = t.select(tpp["geom"].alias("layer_geom"), tpp.alias("prep"))
     dissolve = leg(
-        intersection_percent_by_area(records, tiles, dissolve=True), "dissolve"
+        intersection_percent_by_area(records, tiles, dissolve=True, **prep),
+        "dissolve",
     )
 
     return pairwise.unionByName(concave).unionByName(dissolve)

@@ -37,9 +37,9 @@ def _customer_rects(spark: SparkSession, sf_dir: str, half: float = 3.0) -> Data
     h = F.lit(half)
     cx, cy = F.col("cx"), F.col("cy")
     # ONE fused, vectorized crossing (r18): geometry + the spatial
-    # joins' prep metadata (`_rx` = st_prepare's struct) in a single
-    # st_poly_prep kernel — the operators detect `_rx` and skip their
-    # own per-row prepare pass
+    # joins' prep metadata (`prep` = st_prepare's struct) in a single
+    # st_poly_prep kernel — callers pass record_prep="prep" and the
+    # operators skip their own per-row prepare pass
     pp = K.st_poly_prep(
         F.array(cx - h, cx + h, cx + h, cx - h),
         F.array(cy - h, cy - h, cy + h, cy + h),
@@ -47,7 +47,7 @@ def _customer_rects(spark: SparkSession, sf_dir: str, half: float = 3.0) -> Data
     return cust.select(
         F.col("c_custkey").alias("identifier"),
         pp["geom"].alias("geom"),
-        pp.alias("_rx"),
+        pp.alias("prep"),
     )
 
 
@@ -64,7 +64,7 @@ def _tile_layer(spark: SparkSession) -> DataFrame:
         F.array(x0, x0 + 10, x0 + 10, x0),
         F.array(y0, y0, y0 + 10, y0 + 10),
     )
-    return t.select(pp["geom"].alias("layer_geom"), pp.alias("_lx"))
+    return t.select(pp["geom"].alias("layer_geom"), pp.alias("prep"))
 
 
 TILES_SQL = """
@@ -97,7 +97,7 @@ def _customer_ells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cust.select(
         F.col("c_custkey").alias("identifier"),
         pp["geom"].alias("geom"),
-        pp.alias("_rx"),
+        pp.alias("prep"),
     )
 
 
@@ -110,7 +110,7 @@ def _ell_tile_layer(spark: SparkSession) -> DataFrame:
         F.array(x0, x0 + 10, x0 + 10, x0 + 5, x0 + 5, x0),
         F.array(y0, y0, y0 + 5, y0 + 5, y0 + 10, y0 + 10),
     )
-    return t.select(pp["geom"].alias("layer_geom"), pp.alias("_lx"))
+    return t.select(pp["geom"].alias("layer_geom"), pp.alias("prep"))
 
 
 ELLS_SQL = """
@@ -411,13 +411,14 @@ def _j1_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         ((F.col("value") % 170) - 85).alias("y"),
     )
     # r18: a point's join-prep metadata is closed-form — bbox is
-    # [x, y, x, y] and points are always boxy — so `_rx` builds in
+    # [x, y, x, y] and points are always boxy — so `prep` builds in
     # whole-stage codegen and NO WKB parse happens for it; the geom
     # column (the slow branch's kernel arg) stays the vectorized
-    # st_point. The operators detect `_rx`/`_lx` and skip their
-    # per-row st_bbox_boxy pass (r17: that pass was ~1s of the row).
+    # st_point. Passing record_prep="prep"/layer_prep="prep" skips the
+    # operators' per-row st_bbox_boxy pass (r17: that pass was ~1s of
+    # the row).
     pts = ev.withColumn("geom", K.st_point("x", "y")).withColumn(
-        "_rx",
+        "prep",
         F.expr(
             "CASE WHEN x IS NULL OR y IS NULL OR isnan(x) OR isnan(y)"
             " THEN named_struct('bbox', CAST(NULL AS ARRAY<DOUBLE>),"
@@ -431,13 +432,13 @@ def _j1_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         (((F.col("n_nationkey") % 5) * 30).cast("double") - 75).alias("y0"),
     )
     # same rectangle ring the WKT text built (float->string->float
-    # round-trips are exact), one fused vectorized crossing + `_lx`
+    # round-trips are exact), one fused vectorized crossing + `prep`
     x0, y0 = F.col("x0"), F.col("y0")
     pp = K.st_poly_prep(
         F.array(x0, x0 + 10, x0 + 10, x0),
         F.array(y0, y0, y0 + 20, y0 + 20),
     )
-    layer = nation.select(pp["geom"].alias("layer_geom"), pp.alias("_lx"))
+    layer = nation.select(pp["geom"].alias("layer_geom"), pp.alias("prep"))
     return pts, layer
 
 
@@ -465,9 +466,10 @@ def j1_boolean_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     The two strategies CHAIN (boolean_intersect preserves its input
     columns), so no extra join is paid to combine the flags."""
     pts, layer = _j1_inputs(spark, sf_dir)
-    flagged = boolean_intersect(pts, layer, out="in_zone")
+    prep = {"record_prep": "prep", "layer_prep": "prep"}
+    flagged = boolean_intersect(pts, layer, out="in_zone", **prep)
     both = boolean_intersect(
-        flagged, layer, out="in_zone_grid", strategy="grid", cell=20.0
+        flagged, layer, out="in_zone_grid", strategy="grid", cell=20.0, **prep
     )
     return both.select(
         F.col("identifier").alias("event_id"), "in_zone", "in_zone_grid"
@@ -525,7 +527,9 @@ def g9_line_clip_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("identifier"),
         K.st_make_line(F.array(cx - 20, cx + 20), F.array(y, y)).alias("geom"),
     )
-    clipped = intersection_geom(lines, _tile_layer(spark), geom_dest="zone")
+    clipped = intersection_geom(
+        lines, _tile_layer(spark), geom_dest="zone", layer_prep="prep"
+    )
     return clipped.select(
         F.col("identifier").cast("long").alias("c_custkey"),
         F.round(F.coalesce(K.st_length("zone"), F.lit(0.0)), 6).alias("clip_len"),
@@ -555,7 +559,9 @@ FROM rect r LEFT JOIN
 def j3_intersection_geom_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     rects = _customer_rects(spark, sf_dir)
     layer = _tile_layer(spark)
-    clipped = intersection_geom(rects, layer, geom_dest="zone")
+    clipped = intersection_geom(
+        rects, layer, geom_dest="zone", record_prep="prep", layer_prep="prep"
+    )
     return clipped.select(
         F.col("identifier").cast("long").alias("c_custkey"),
         F.round(F.coalesce(K.st_area("zone"), F.lit(0.0)), 6).alias("zone_area"),

@@ -31,6 +31,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from terra_bonobo_nodes_spark.columns import working_names
+
+
 def _events_schema(spark: SparkSession, src: str) -> T.StructType:
     """readStream needs an explicit schema; delegate to the memoized
     per-path footer sniff in ``tables.events_schema`` (one read per
@@ -422,6 +425,7 @@ def stream_static_enrich(
             "stream_static_enrich: key_expr is required — there is no "
             "sensible default stream-side join key"
         )
-    lhs = events.withColumn("_dim_key", key_expr.cast("int"))
-    rhs = F.broadcast(dim.withColumnRenamed(dim_key, "_dim_key"))
-    return lhs.join(rhs, "_dim_key", how).drop("_dim_key")
+    dk = working_names([events, dim], "_dim_key")
+    lhs = events.withColumn(dk, key_expr.cast("int"))
+    rhs = F.broadcast(dim.withColumnRenamed(dim_key, dk))
+    return lhs.join(rhs, dk, how).drop(dk)

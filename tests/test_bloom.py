@@ -205,14 +205,22 @@ def test_build_memoizes_per_session_and_plan(spark):
     assert other != first  # the filtered bench really rebuilt
 
 
-def test_probe_rejects_reserved_working_columns(spark):
-    """ADVICE r17: a corpus already carrying _bl_* would produce an
-    ambiguous duplicate through the chained selectExpr('*', ...) —
-    fail loudly instead."""
+def test_probe_preserves_caller_working_columns(spark):
+    """A corpus column named like one of the probe's working columns
+    (``_bl_*``) passes through untouched, and the flags equal those of
+    the same corpus without it."""
     bench = spark.createDataFrame([(0, BENCH_TEXTS[0])], "doc_id long, text string")
     bits = build_bloom_bits(bench, n=N, m_bits=M, k=K)
     corpus = spark.createDataFrame(
-        [(0, "some text", [])], "doc_id long, text string, _bl_grams array<string>"
+        [(0, BENCH_TEXTS[0], ["kept"]), (1, "some text", [])],
+        "doc_id long, text string, _bl_grams array<string>",
     )
-    with pytest.raises(ValueError, match="_bl_grams"):
-        flag_bloom_contaminated(corpus, bits, n=N, k=K)
+    out = flag_bloom_contaminated(corpus, bits, n=N, k=K)
+    plain = flag_bloom_contaminated(corpus.drop("_bl_grams"), bits, n=N, k=K)
+    assert out.columns == corpus.columns + [
+        "bloom_n_ngrams", "bloom_n_hits", "bloom_flagged"
+    ]
+    assert sorted(map(tuple, out.collect())) == sorted(
+        (r[0], r[1], g, *r[2:])
+        for r, g in zip(sorted(map(tuple, plain.collect())), (["kept"], []))
+    )

@@ -177,3 +177,39 @@ def test_learner_invariant_under_shuffle_layout(spark):
     assert_layout_invariant(spark, lambda: spark.createDataFrame(
         bpe.bpe_learn(load_table(spark, SF_DIR, "documents"), "text", n_merges=8),
         "merge_rank int, sym_a string, sym_b string, pair_count long"))
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_word_frequencies_is_distributed_topk(spark):
+    from terra_bonobo_nodes_spark.llm import bpe
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the dog sat")], "doc_id long, text string"
+    )
+    wf = bpe.word_frequencies(docs, max_words=3)
+    plan = _physical_plan(wf)
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan
+    rows = [(r.word, r.n) for r in wf.collect()]
+    # count desc, word asc (GPT-2-style pretokens keep the leading
+    # space, and " sat" sorts before "the") — deterministic truncation
+    assert rows == [(" sat", 2), ("the", 2), (" cat", 1)]
+
+
+def test_encode_words_string_id(spark):
+    from terra_bonobo_nodes_spark.llm import bpe
+
+    docs = spark.createDataFrame(
+        [("doc-a", "hug hug pun"), ("doc-b", "bun")], "doc_id string, text string"
+    )
+    merges = bpe.train_bpe([("hug", 10), ("pun", 12), ("bun", 4)], n_merges=4)
+    enc = bpe.encode_words(docs, merges)
+    assert dict(enc.dtypes)["doc_id"] == "string"
+    got = {r.doc_id: r.bpe_tokens for r in enc.collect()}
+    assert set(got) == {"doc-a", "doc-b"}
+    assert "".join(got["doc-a"]).startswith("hug")
+    counts = {r.doc_id: r.n_bpe_tokens for r in bpe.bpe_token_count(docs, merges).collect()}
+    assert counts["doc-a"] >= 3  # three words at least one token each

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import math
 
+from pyspark.sql import functions as F
+
 from terra_bonobo_nodes_spark.operators.quality import (
     distribution_drift,
     distribution_drift_sql,
@@ -194,3 +196,21 @@ def test_robust_outliers_invariant_under_shuffle_layout(spark):
 
     assert_layout_invariant(spark, lambda: robust_outliers(
         load_table(spark, SF_DIR, "documents"), "n_chars", "source", k_num=5))
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_partition_skew_report_is_distributed_topk(spark):
+    from terra_bonobo_nodes_spark.operators.quality import partition_skew_report
+
+    df = spark.range(100).withColumn("k", (F.col("id") % 7).cast("string"))
+    rep = partition_skew_report(df, key_cols=["k"], top_n=3)
+    plan = _physical_plan(rep)
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan
+    hot = [r for r in rep.collect() if r.facet == "hot_key"]
+    assert len(hot) == 3
+    # keys 0 and 1 have 15 rows, the rest 14 — ties break on the key
+    assert [(r.key, r.n_rows) for r in hot] == [("0", 15), ("1", 15), ("2", 14)]

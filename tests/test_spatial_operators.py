@@ -467,13 +467,16 @@ class TestKdbStrategy:
         from tests.conftest import SF_DIR
 
         pts, layer = _j1_inputs(spark, SF_DIR)
+        prep = {"record_prep": "prep", "layer_prep": "prep"}
         want = sorted(
             tuple(r)
-            for r in boolean_intersect(pts, layer, out="z").select("identifier", "z").collect()
+            for r in boolean_intersect(pts, layer, out="z", **prep)
+            .select("identifier", "z")
+            .collect()
         )
         got = sorted(
             tuple(r)
-            for r in boolean_intersect(pts, layer, out="z", strategy="kdb")
+            for r in boolean_intersect(pts, layer, out="z", strategy="kdb", **prep)
             .select("identifier", "z")
             .collect()
         )
@@ -552,7 +555,9 @@ class TestKdbStrategy:
 
         pts, layer = _j1_inputs(spark, SF_DIR)
         empty = pts.limit(0)
-        out = boolean_intersect(empty, layer, out="z", strategy="kdb")
+        out = boolean_intersect(
+            empty, layer, out="z", strategy="kdb", record_prep="prep", layer_prep="prep"
+        )
         assert out.count() == 0
 
     def test_kdb_equals_broadcast_on_j2_and_j3(self, spark):
@@ -573,15 +578,16 @@ class TestKdbStrategy:
         from pyspark.sql import functions as F
 
         rec, lay = _customer_rects(spark, SF_DIR), _tile_layer(spark)
+        prep = {"record_prep": "prep", "layer_prep": "prep"}
         # percent-by-area: scalar outputs compare directly
-        base = intersection_percent_by_area(rec, lay)
+        base = intersection_percent_by_area(rec, lay, **prep)
         want = sorted(
             (r[0], round(r[1], 6))
             for r in base.select("identifier", "intersection_percent").collect()
         )
         got = sorted(
             (r[0], round(r[1], 6))
-            for r in intersection_percent_by_area(rec, lay, strategy="kdb")
+            for r in intersection_percent_by_area(rec, lay, strategy="kdb", **prep)
             .select("identifier", "intersection_percent")
             .collect()
         )
@@ -596,8 +602,8 @@ class TestKdbStrategy:
                 ).collect()
             )
 
-        g_want = areas(intersection_geom(rec, lay))
-        g_got = areas(intersection_geom(rec, lay, strategy="kdb"))
+        g_want = areas(intersection_geom(rec, lay, **prep))
+        g_got = areas(intersection_geom(rec, lay, strategy="kdb", **prep))
         assert g_got == g_want and any(a > 0 for _, a in g_got)
 
 
@@ -721,27 +727,17 @@ def test_dissolve_rect_fast_plan_carries_the_sweep_agg(spark):
     assert "collect_list" in plan
 
 
-def test_grid_candidates_accept_column_bbox_args(spark):
-    """ADVICE r17: the grid strategy's SQL-text fast path must not
-    narrow the previously Column-typed bbox parameters — Column args
-    route through the same algebra (broadcast/kdb parity)."""
-    from pyspark.sql import functions as F
+def test_kdb_empty_record_side_single_leaf(spark):
+    """An empty record side degenerates to one kdb leaf and the join
+    yields zero candidates — no crash, no special-case branch needed."""
+    from terra_bonobo_nodes_spark.operators import spatial
 
-    from terra_bonobo_nodes_spark.geo import kernels as K
-    from terra_bonobo_nodes_spark.operators import spatial as S
-    from terra_bonobo_nodes_spark.plans.queries_geo import _j1_inputs
-    from tests.conftest import SF_DIR
-
-    pts, layer = _j1_inputs(spark, SF_DIR)
-    rec = pts.select("identifier", "geom").withColumn(
-        "_rx", K.st_bbox_boxy(F.col("geom"))
+    rec = spark.createDataFrame(
+        [], "identifier string, _rx struct<geom string, bbox array<double>, area double>"
+    ).withColumn("_rb", F.col("_rx.bbox"))
+    lay = spark.createDataFrame(
+        [("POLYGON((0 0,1 0,1 1,0 1,0 0))", [0.0, 0.0, 1.0, 1.0])],
+        "layer_geom string, _lb array<double>",
     )
-    lay = layer.select("layer_geom").withColumn(
-        "_lx", K.st_bbox_boxy(F.col("layer_geom"))
-    )
-    want = S._candidates(rec, lay, "_rx.bbox", "_lx.bbox", "grid", 20.0)
-    got = S._candidates(
-        rec, lay, F.col("_rx.bbox"), F.col("_lx.bbox"), "grid", 20.0
-    )
-    assert got.count() == want.count() > 0
-    assert sorted(got.columns) == sorted(want.columns)
+    out = spatial._kdb_candidates(rec, lay, F.col("_rx.bbox"), F.col("_lb"))
+    assert out.count() == 0
